@@ -3,47 +3,39 @@ package graft
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR
   * and prints one JSON line {"metric":"total","value":…,"queries":…}.
   *
+  *   runMain graft.Bench [k1,k2,…]
+  *
+  * The optional argument keeps only the named keys (a dev focus
+  * filter); the full artifact goes to SPARK_GRAFT_BENCH_OUT
+  * (BENCH_FULL.json).
+  *
   * Each query is forced through the noop sink — a count() would let
   * Catalyst prune the projections of map-only queries (text_*, mm_*)
-  * and time an empty scan instead of the operator.
+  * and time an empty scan instead of the operator. Queries run on the
+  * Families harness, one fresh session per chunk, so per-query numbers
+  * measure the query in near-isolation instead of their neighbors'
+  * garbage (the round-9 fix: cdc_compact read 7.50 s in one shared
+  * session vs 0.87 s isolated).
   *
-  * SESSION RECYCLING (the round-9 fix): running 167 queries × 4
-  * executions through ONE SparkSession accumulates JVM pressure —
-  * status-store state, shuffle bookkeeping, old broadcast and
-  * checkpoint blocks, heap fragmentation — and families that happen to
-  * run late report 3–8× their isolated cost (round-9 VERDICT measured
-  * cdc_compact at 7.50 s in the full suite vs 0.87 s isolated; the
-  * spread bands don't reveal it because all iterations of a query run
-  * in the same degraded state). The queries were innocent; the harness
-  * wasn't. So the suite now runs in CHUNKS: queries are grouped by
-  * operator family (fixture-sharing families stay together so
-  * session-scoped fixtures build once per chunk, in the untimed warm
-  * pass), families larger than SPARK_GRAFT_BENCH_CHUNK (12) split, and
-  * each chunk gets a FRESH SparkSession, with the old one stopped,
-  * fixtures invalidated, and a GC nudge in between. Per-query numbers
-  * then measure the query in near-isolation — comparable round over
-  * round and to a one-off run — instead of measuring their neighbors'
-  * garbage. Janino's codegen cache is JVM-static and survives
-  * recycling, so warm-pass compilation still amortizes.
-  *
-  * Steady-state timing: every query runs once untimed first (codegen
-  * compilation of the wide-aggregate queries costs seconds on first
-  * execution — a per-process constant that a long-running deployment
-  * amortizes to zero), then SPARK_GRAFT_BENCH_ITERS (3) timed
-  * iterations per query, reporting the per-query MEDIAN — a single
-  * local[32] execution swings with GC/scheduling luck, and a gate on
-  * one sample gates on that luck. The cache is cleared before every
-  * timed iteration so queries that persist per-call intermediates pay
-  * their materialization honestly each time. The chunk-scoped fixtures
-  * (Trike's framed-message stream, Dedup's tokenized shingle rows and
-  * MinHash signature/pair-graph tables) survive clearCache by design:
-  * they model tables a production pipeline materializes once per
-  * corpus snapshot, so steady-state timings price reading them, not
-  * rebuilding them — the rebuild cost is visible in cold mode.
-  * Set SPARK_GRAFT_BENCH_COLD=1 to time first executions instead; the
-  * JSON carries which mode ran.
+  * Steady-state timing: every query of a chunk runs once untimed first
+  * (codegen compilation of the wide-aggregate queries costs seconds on
+  * first execution — a per-process constant that a long-running
+  * deployment amortizes to zero), then `Iters` timed iterations per
+  * query, reporting the per-query MEDIAN — a single execution swings
+  * with GC/scheduling luck, and a gate on one sample gates on that
+  * luck. The cache is cleared before every timed iteration so queries
+  * that persist per-call intermediates pay their materialization
+  * honestly each time. The chunk-scoped fixtures (Trike's framed-message
+  * stream, Dedup's tokenized shingle rows and MinHash signature/
+  * pair-graph tables) survive clearCache by design: they model tables a
+  * production pipeline materializes once per corpus snapshot, so
+  * steady-state timings price reading them; their builds are reported
+  * as line items of their own (`fixtures`).
   */
 object Bench {
+
+  /** Timed iterations per query. */
+  private val Iters = 3
 
   /** The stdout line must stay SHORT: the driver keeps only the last
     * ~2000 chars of stdout and parses the JSON line out of that tail —
@@ -60,137 +52,57 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val cold = sys.env.get("SPARK_GRAFT_BENCH_COLD").contains("1")
-    // Dev-only focus filter (comma-separated keys); the driver sets
-    // neither and always benches the full set.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val chunkCap = sys.env.getOrElse("SPARK_GRAFT_BENCH_CHUNK", "12").toInt
-    val iters =
-      if (cold) 1 else sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-
-    // Size the initial shuffle granularity by INPUT SCALE, not just
-    // cores (see GraftSession): ≥1 GiB of parquet gets the sf10
-    // spill-safe 8× cores; smaller inputs keep `cores` so sub-second
-    // stages aren't taxed by 256-way shuffle setup (the r16 sketch-
-    // family regression, isolated in round 17).
-    if (sys.props.get("graft.initialParts").isEmpty &&
-        sys.env.get("SPARK_GRAFT_INITIAL_PARTS").isEmpty) {
-      val dirBytes = scala.util.Try {
-        val d = java.nio.file.Paths.get(sfDir)
-        val s = java.nio.file.Files.walk(d)
-        try s.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally s.close()
-      }.getOrElse(Long.MaxValue)
-      val parts = if (dirBytes >= (1L << 30)) cpus * 8 else cpus
-      System.setProperty("graft.initialParts", parts.toString)
-      System.err.println(s"[bench] input ${dirBytes >> 20} MiB -> " +
-        s"initialPartitionNum $parts")
-    }
-
-    val all = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    val chunks = Families.chunked(all, chunkCap)
-
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
+    val only = args.headOption.map(_.split(",").toSet)
+    val artifactPath = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json"))
 
     // CONTENTION TELEMETRY (the round-12 fix): round-11's bench showed
     // 41 band-disjoint "regressions" up to 12× that turned out to be an
-    // oversubscribed machine, and nothing in the artifact could prove
-    // it either way. Now every timed iteration also records the JVM's
-    // process-CPU delta (com.sun.management.OperatingSystemMXBean): a
-    // query whose WALL time regresses while its CPU time holds steady
-    // did the same work but waited for the box — contention; a query
-    // whose CPU regresses with it genuinely runs a worse plan. Each
-    // query also samples the 1-minute system loadavg at its start. The
-    // JSON grows "cpu" (per-query median CPU sec) and "load" (per-query
-    // loadavg at start); tools/benchdiff.py uses both to refuse
-    // wall-only regressions whose CPU band overlaps.
+    // oversubscribed machine. Every timed iteration also records the
+    // JVM's process-CPU delta: a query whose WALL time regresses while
+    // its CPU time holds steady did the same work but waited for the
+    // box; one whose CPU regresses with it runs a worse plan. Each
+    // query also samples the 1-minute loadavg at its start;
+    // tools/benchdiff.py uses both to refuse wall-only regressions.
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    val results = scala.collection.mutable.Map.empty[String, Sample]
 
-    // HOST-STEAL TELEMETRY (round-18, the r17 verdict's item 3): the
-    // sandbox host has CPU-steal waves (round-17 measured identical
-    // jobs swinging ×2–10 between adjacent runs), and the wall/cpu
-    // medians alone cannot prove which windows were contaminated.
-    // Sample /proc/stat's cumulative steal jiffies around each query's
-    // timed iterations and stamp the per-query delta (in seconds,
-    // USER_HZ = 100) into BENCH_FULL — a reviewer can now discount a
-    // contaminated window mechanically instead of by narrative.
-    def stealJiffies(): Long = scala.util.Try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      try src.getLines().next().trim.split("\\s+").drop(1).lift(7)
-        .map(_.toLong).getOrElse(0L)
-      finally src.close()
-    }.getOrElse(0L)
-
-    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    val results = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Option[(Double, Double, Double, Double, Double, Double, Double, Double)])]
-    // Fixture builds as their own line items (the round-13 attribution
-    // fix): the session-scoped fixture getters record their build time
-    // in Families' ledger when they actually build — in warm mode that
-    // happens inside the untimed warm pass, so the timed medians below
-    // price READING a fixture, never building it, and the build cost is
-    // still visible here instead of vanishing (or, in cold mode,
-    // doubling into the first consumer's sample).
-    val fixtureBuilds = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-
-    // Stamp the JVM heap into the artifact: heap size is a measured
-    // perf variable on this workload (build.sbt caps -Xmx at 16g for
-    // exactly that reason), so a reviewer comparing rounds must be
-    // able to see what heap each number ran under.
+    // Heap size is a measured perf variable on this workload (build.sbt
+    // caps -Xmx at 16g for exactly that reason), and the git SHA names
+    // the code a number came from: both are stamped into the artifact.
     val heapMb = Runtime.getRuntime.maxMemory / (1024L * 1024L)
-
-    // Stamp the git SHA the run executed at: the r15→r16 fixture
-    // re-pricing made cross-round artifact diffs archaeology without
-    // knowing which commit produced which number.
     val gitSha = scala.util.Try(
       scala.sys.process.Process(Seq("git", "rev-parse", "--short", "HEAD"))
         .!!.trim).getOrElse("unknown")
 
-    def artifactPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json"))
+    def obj[V](m: Iterable[(String, V)])(f: V => String): String =
+      m.map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
+    def band(xs: Seq[Double]): String = "[" + xs.min + "," + xs.max + "]"
+    def total: Double = results.toSeq.sortBy(_._1).map(s => median(s._2.wall)).sum
 
-    // Artifact snapshot from the results so far. Written after EVERY
-    // chunk with "partial":true (round-16 lesson: an sf10 executor OOM
-    // stopped the context, the next chunk's getOrCreate threw out of
-    // main, and the end-of-run-only write lost an hour of finished
-    // measurements), then finally without the flag.
-    def fullLine(partial: Boolean): String = {
+    // The COMPLETE artifact (every key: median + [min,max] spread band,
+    // cpu, load, steal — the run-to-run spread is what makes a single
+    // round's median actionable at all, see SURVEY §7). Written after
+    // EVERY chunk with "partial":true (round-16 lesson: an sf10 executor
+    // OOM stopped the context and the end-of-run-only write lost an hour
+    // of finished measurements), then finally without the flag.
+    def fullLine(r: Families.Run, partial: Boolean): String = {
       val sorted = results.toSeq.sortBy(_._1)
-      val qs = sorted.collect { case (k, Some((m, _, _, _, _, _, _, _))) => "\"" + k + "\":" + m }
-        .mkString("{", ",", "}")
-      val spread = sorted.collect { case (k, Some((_, lo, hi, _, _, _, _, _))) =>
-        "\"" + k + "\":[" + lo + "," + hi + "]"
-      }.mkString("{", ",", "}")
-      val cpu = sorted.collect { case (k, Some((_, _, _, cm, _, _, _, _))) =>
-        "\"" + k + "\":" + cm
-      }.mkString("{", ",", "}")
-      val cpuSpread = sorted.collect { case (k, Some((_, _, _, _, clo, chi, _, _))) =>
-        "\"" + k + "\":[" + clo + "," + chi + "]"
-      }.mkString("{", ",", "}")
-      val load = sorted.collect { case (k, Some((_, _, _, _, _, _, la, _))) =>
-        "\"" + k + "\":" + la
-      }.mkString("{", ",", "}")
-      val steal = sorted.collect { case (k, Some((_, _, _, _, _, _, _, st))) =>
-        "\"" + k + "\":" + st
-      }.mkString("{", ",", "}")
-      val fj = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val total = sorted.flatMap(_._2.map(_._1)).sum
-      val mode = if (cold) "cold" else "warm"
-      val fixturesJson = fixtureBuilds.groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (k, ts) =>
-          "\"" + k + "\":[" + ts.map(_._2).mkString(",") + "]"
-        }.mkString("{", ",", "}")
-      val fixtureSec = fixtureBuilds.map(_._2).sum
+      val fixtures = r.fixtures.groupBy(_._1).toSeq.sortBy(_._1)
       val pflag = if (partial) "\"partial\":true," else ""
-      s"""{"metric":"total",$pflag"value":$total,"unit":"sec","queries":$qs,"spread":$spread,"cpu":$cpu,"cpu_spread":$cpuSpread,"load":$load,"steal":$steal,"failed":$fj,"fixtures":$fixturesJson,"fixture_sec":$fixtureSec,"mode":"$mode","iters":$iters,"chunks":${chunks.size},"heap_mb":$heapMb,"git":"$gitSha","sf":"$sfDir"}"""
+      s"""{"metric":"total",$pflag"value":$total,"unit":"sec",""" +
+        s""""queries":${obj(sorted)(s => median(s.wall).toString)},""" +
+        s""""spread":${obj(sorted)(s => band(s.wall))},""" +
+        s""""cpu":${obj(sorted)(s => median(s.cpu).toString)},""" +
+        s""""cpu_spread":${obj(sorted)(s => band(s.cpu))},""" +
+        s""""load":${obj(sorted)(_.load.toString)},""" +
+        s""""steal":${obj(sorted)(_.steal.fold("null")(_.toString))},""" +
+        s""""failed":${r.failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+        s""""fixtures":${obj(fixtures)(_.map(_._2).mkString("[", ",", "]"))},""" +
+        s""""fixture_sec":${r.fixtures.map(_._2).sum},"mode":"warm",""" +
+        s""""iters":$Iters,"cpus":${r.cpus},"initial_parts":${r.initialParts},""" +
+        s""""heap_mb":$heapMb,"git":"$gitSha","sf":"$sfDir"}"""
     }
 
     def writeArtifact(line: String): Unit =
@@ -199,110 +111,49 @@ object Bench {
         System.err.println(s"[bench] artifact write failed: ${e.getMessage}")
       }
 
-    chunks.foreach { chunk =>
-      // Chunk fault isolation (round-16): an executor OOM can stop the
-      // context mid-chunk and leave a dead default session behind;
-      // without this guard the next chunk's getOrCreate threw straight
-      // out of main and killed the run. A failed chunk marks its
-      // remaining queries failed, clears the dead session references,
-      // and the run continues on a fresh context.
-      try {
-      val spark = GraftSession.builder(cpus).getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      Families.drainFixtureTimes() // discard any pre-chunk leftovers
-      // Untimed warm pass: table reads, codegen, chunk fixtures.
-      Tables(spark, sfDir).region.write.format("noop").mode("overwrite").save()
-      if (!cold) chunk.foreach { case (_, fn) =>
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    def noop(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+
+    val run = Families.run("bench", sfDir, only)({ c =>
+      val spark = c.spark
+      // Untimed warm pass: table reads, codegen, chunk fixtures. A
+      // fixture built here is priced in `fixtures`, not in the medians.
+      noop(Tables(spark, sfDir).region)
+      c.queries.foreach { case (_, fn) =>
+        try noop(fn(spark, sfDir))
         catch { case _: Throwable => () } // failures re-surface in the timed pass
       }
-      chunk.foreach { case (name, fn) =>
+      c.queries.foreach { case (name, fn) =>
         // A failed iteration's elapsed time is time-to-failure, not a
-        // query timing — keep it out of the median, and stop iterating
-        // on that query (it will fail identically again).
-        val samples = scala.collection.mutable.ArrayBuffer.empty[Double]
-        val cpuSamples = scala.collection.mutable.ArrayBuffer.empty[Double]
-        val loadAtStart = osBean.getSystemLoadAverage
-        val steal0 = stealJiffies()
-        var broken = false
-        (1 to iters).foreach { _ =>
-          if (!broken) {
+        // query timing: the query is failed and reports no samples.
+        val wall, cpu = scala.collection.mutable.ArrayBuffer.empty[Double]
+        val load = osBean.getSystemLoadAverage
+        val steal0 = stealTicks()
+        val ok = c.attempt(name) {
+          (1 to Iters).foreach { _ =>
             spark.catalog.clearCache()
             val c0 = osBean.getProcessCpuTime
             val t0 = System.nanoTime()
-            try {
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-              samples += (System.nanoTime() - t0) / 1e9
-              cpuSamples += (osBean.getProcessCpuTime - c0) / 1e9
-            } catch { case e: Throwable =>
-              broken = true
-              if (!failed.contains(name)) failed += name
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            }
+            noop(fn(spark, sfDir))
+            wall += (System.nanoTime() - t0) / 1e9
+            cpu += (osBean.getProcessCpuTime - c0) / 1e9
           }
         }
-        // Host steal across this query's whole timed window (all
-        // iterations), in seconds of stolen CPU; > ~0.5 s on a
-        // sub-second query marks the window contaminated.
-        val stealSec = (stealJiffies() - steal0) / 100.0
-        // timings and the failed list are mutually exclusive: a broken
-        // query's pre-failure samples are not a timing for the query.
-        results += (name -> (if (broken || samples.isEmpty) None
-                             else Some((median(samples.toSeq), samples.min, samples.max,
-                                        median(cpuSamples.toSeq), cpuSamples.min,
-                                        cpuSamples.max, loadAtStart, stealSec))))
+        // > ~0.5 s of steal on a sub-second query marks its window
+        // contaminated.
+        if (ok) results(name) = Sample(wall.toSeq, cpu.toSeq, load,
+          for (a <- steal0; b <- stealTicks()) yield (b - a) / 100.0)
       }
-      // Retire the chunk's session: drop fixture references into the
-      // dying context, stop it, and nudge the collector so the next
-      // chunk starts from a near-fresh heap rather than inheriting
-      // this one's garbage.
-      fixtureBuilds ++= Families.drainFixtureTimes()
-      Families.invalidateFixtures()
-      spark.stop()
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] chunk starting at " +
-          s"${chunk.headOption.map(_._1).getOrElse("?")} aborted: ${e.getMessage}")
-        chunk.foreach { case (name, _) =>
-          if (!results.exists(_._1 == name)) {
-            if (!failed.contains(name)) failed += name
-            results += (name -> None)
-          }
-        }
-        // Keep the crashed chunk's fixture-build ledger: without this
-        // drain the next chunk's "discard pre-chunk leftovers" drain
-        // would silently eat these entries, and fixture builds from an
-        // aborted chunk would vanish from fixtures/fixture_sec while
-        // the chunk's completed query timings are kept.
-        fixtureBuilds ++=
-          scala.util.Try(Families.drainFixtureTimes()).getOrElse(Nil)
-        scala.util.Try(Families.invalidateFixtures())
-        scala.util.Try(
-          org.apache.spark.sql.SparkSession.getActiveSession.foreach(_.stop()))
-        scala.util.Try(org.apache.spark.sql.SparkSession.clearActiveSession())
-        scala.util.Try(org.apache.spark.sql.SparkSession.clearDefaultSession())
-      }
-      writeArtifact(fullLine(partial = true))
-      System.gc()
-    }
+    }, r => writeArtifact(fullLine(r, partial = true)))
 
-    // The COMPLETE artifact (every key: median + [min,max] spread band,
-    // cpu, load — the run-to-run spread is what makes a single round's
-    // median actionable at all, see SURVEY §7) goes to a repo file a
-    // reviewer can audit without re-running the suite; stdout gets a
-    // SHORT headline line that survives the driver's 2000-char tail
-    // capture (see `headline`).
-    writeArtifact(fullLine(partial = false))
-    val sorted = results.toSeq.sortBy(_._1)
-    val fixtureSec = fixtureBuilds.map(_._2).sum
-    val total = sorted.flatMap(_._2.map(_._1)).sum
-    val mode = if (cold) "cold" else "warm"
-    val medians = sorted.collect { case (k, Some((m, _, _, _, _, _, _, _))) => k -> m }.toMap
-    val hq = headline.flatMap(k => medians.get(k).map(m => "\"" + k + "\":" + m))
-      .mkString("{", ",", "}")
+    writeArtifact(fullLine(run, partial = false))
+    val failed = run.failed.toSeq
+    val hq = obj(headline.flatMap(k => results.get(k).map(k -> _)))(s =>
+      median(s.wall).toString)
     val fshort = (failed.take(5).map("\"" + _ + "\"") ++
       (if (failed.size > 5) Seq("\"+" + (failed.size - 5) + " more\"") else Nil))
       .mkString("[", ",", "]")
-    val headlineLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$hq,"sf":"$sfDir","n_queries":${medians.size},"n_failed":${failed.size},"failed":$fshort,"mode":"$mode","iters":$iters,"fixture_sec":$fixtureSec,"heap_mb":$heapMb,"git":"$gitSha","full":"BENCH_FULL.json"}"""
+    val headlineLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$hq,"sf":"$sfDir","n_queries":${results.size},"n_failed":${failed.size},"failed":$fshort,"mode":"warm","iters":$Iters,"fixture_sec":${run.fixtures.map(_._2).sum},"heap_mb":$heapMb,"git":"$gitSha","full":"BENCH_FULL.json"}"""
 
     // SELF-CHECK (the round-13 ask: BENCH_r11/r12 came back
     // `parsed: null` and nobody noticed until the judge did). Recreate
@@ -311,8 +162,7 @@ object Bench {
     // classpath) — and fail LOUDLY here if that would fail there. Also
     // re-read the BENCH_FULL artifact from disk and parse it.
     def mustParse(what: String, s: String): Unit = {
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      val node = m.readTree(s)
+      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(s)
       require(node != null && node.has("metric") && node.has("value"),
         s"$what: parsed JSON lacks metric/value")
     }
@@ -321,9 +171,7 @@ object Bench {
         s"headline line is ${headlineLine.length} chars — the driver keeps " +
           "only ~2000 and would truncate it to unparseable")
       mustParse("headline", headlineLine.takeRight(2000))
-      val fullPath = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json"))
-      mustParse("BENCH_FULL", java.nio.file.Files.readString(fullPath))
+      mustParse("BENCH_FULL", java.nio.file.Files.readString(artifactPath))
     } catch { case e: Throwable =>
       System.err.println(s"[bench] SELF-CHECK FAILED: ${e.getMessage}")
       println(headlineLine) // still emit what we have, then fail the run
@@ -332,4 +180,28 @@ object Bench {
     println(headlineLine)
     if (failed.nonEmpty) sys.exit(1)
   }
+
+  /** One query's timed iterations. `steal` is the host's stolen CPU
+    * seconds across them, None when /proc/stat could not be read. */
+  private final case class Sample(wall: Seq[Double], cpu: Seq[Double],
+      load: Double, steal: Option[Double])
+
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2)
+    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
+
+  // HOST-STEAL TELEMETRY (round-18, the r17 verdict's item 3): the
+  // sandbox host has CPU-steal waves (round-17 measured identical jobs
+  // swinging ×2–10 between adjacent runs), and the wall/cpu medians
+  // alone cannot prove which windows were contaminated. The cpu line
+  // of /proc/stat carries cumulative steal as its 8th value, in USER_HZ
+  // ticks; USER_HZ is 100 on every Linux ABI this runs on, so a tick
+  // is 10 ms.
+  private def stealTicks(): Option[Long] = scala.util.Try {
+    val src = scala.io.Source.fromFile("/proc/stat")
+    try src.getLines().next().trim.split("\\s+")(8).toLong
+    finally src.close()
+  }.toOption
 }

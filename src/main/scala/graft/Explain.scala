@@ -6,8 +6,9 @@ import java.nio.file.{Files, Paths}
   *
   *   runMain graft.Explain <sfDir> <outDir> <suffix> <k1,k2,…|all>
   *
-  * Writes <outDir>/<key>_<suffix>.txt per key. The optimization rounds
-  * commit these as plans/rNN/<key>_before.txt / _after.txt so plan
+  * Writes <outDir>/<key>_<suffix>.txt per key, planned on the Families
+  * harness — the session Bench times and Verify checks. The optimization
+  * rounds commit these as plans/rNN/<key>_before.txt / _after.txt so plan
   * claims (Exchange counts, join strategies, PushedFilters) are
   * auditable without running Spark. Note: queries that materialize
   * eagerly while BUILDING their frame (the iterative graph ops, which
@@ -18,29 +19,15 @@ import java.nio.file.{Files, Paths}
 object Explain {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, suffix) = (args(0), args(1), args(2))
-    val keys: Seq[String] =
-      if (args.length < 4 || args(3) == "all") SparkEntry.queries.keys.toSeq.sorted
-      else args(3).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val only = args.lift(3).filter(_ != "all").map(_.split(",").toSet)
     Files.createDirectories(Paths.get(outDir))
-    val spark = GraftSession.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    keys.foreach { k =>
-      SparkEntry.queries.get(k) match {
-        case None => System.err.println(s"[explain] unknown key $k")
-        case Some(fn) =>
-          try {
-            val df = fn(spark, sfDir)
-            val txt = df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
-            Files.writeString(Paths.get(s"$outDir/${k}_$suffix.txt"), txt)
-            System.err.println(s"[explain] $k -> $outDir/${k}_$suffix.txt")
-          } catch { case e: Throwable =>
-            System.err.println(s"[explain] $k failed: ${e.getMessage}")
-          }
+    Families.run("explain", sfDir, only)(c => c.queries.foreach { case (k, fn) =>
+      c.attempt(k) {
+        val txt = fn(c.spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        Files.writeString(Paths.get(s"$outDir/${k}_$suffix.txt"), txt)
+        System.err.println(s"[explain] $k -> $outDir/${k}_$suffix.txt")
       }
-    }
-    Families.invalidateFixtures()
-    spark.stop()
+    })
   }
 }

@@ -111,9 +111,7 @@ object GenScale {
     stageSeed = 1000L +
       (java.nio.file.Paths.get(dst).getFileName.toString.hashCode.toLong
         & 0x7fffffffL) * 65537L
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.live(GraftSession.builder(GraftSession.cpus))
     import java.nio.file.{Files, Paths, StandardCopyOption}
     Files.createDirectories(Paths.get(dst))
 

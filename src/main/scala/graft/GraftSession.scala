@@ -8,7 +8,14 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  def builder(cores: Int): SparkSession.Builder =
+  /** Local cores for every main: SPARK_GRAFT_CPUS, else this machine's
+    * processor count. */
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def builder(cores: Int): SparkSession.Builder = builder(cores, cores * 8)
+
+  def builder(cores: Int, initialParts: Int): SparkSession.Builder =
     SparkSession
       .builder()
       // local[N,2]: the second slot is maxTaskFailures. In local mode
@@ -35,19 +42,14 @@ object GraftSession {
       // coalesce back to few partitions at no cost. Tests (4 cores)
       // move from 4 to 32 initial partitions — a deliberate change;
       // AQE coalesces them back down on tiny suite data.
-      // Overridable (system property first — Bench sets it per input
-      // scale — then env, then the 8× default): round-17 isolated the
-      // r16 "sketch_hll ×3.2 regression" to exactly this knob — the
-      // whole sketch family's sf0.1 wall rose ×2-3 with CPU flat,
-      // because 256 initial partitions tax every tiny shuffle with
-      // map-side file/buffer setup and AQE coalesce latency that
-      // sub-second stages cannot amortize. Bench therefore picks
-      // cores for small inputs (< 1 GiB) and keeps 8× cores for big
-      // ones, where the spill-storm protection is what matters.
+      // The harness passes its own count instead (Families.initialParts):
+      // round-17 isolated the r16 "sketch_hll ×3.2 regression" to exactly
+      // this setting — the whole sketch family's sf0.1 wall rose ×2-3
+      // with CPU flat, because 256 initial partitions tax every tiny
+      // shuffle with map-side file/buffer setup and AQE coalesce latency
+      // that sub-second stages cannot amortize.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.props.get("graft.initialParts")
-          .orElse(sys.env.get("SPARK_GRAFT_INITIAL_PARTS"))
-          .getOrElse((cores * 8).toString))
+        initialParts)
       // events.parquet carries TIMESTAMP(NANOS), which the vectorized
       // reader rejects; read as raw nanos (Tables.events converts).
       // Set here, once, at construction — not as a side effect of a
@@ -76,16 +78,24 @@ object GraftSession {
   @volatile private var testSession: SparkSession = _
   def test: SparkSession = synchronized {
     if (testSession == null || testSession.sparkContext.isStopped) {
-      if (testSession != null) {
-        // Drop the corpse from Spark's registries or getOrCreate may
-        // hand the same stopped session back.
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-      }
-      val s = builder(4).getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      testSession = s
+      // Fixtures still reference the dead context's blocks.
+      Families.invalidateFixtures()
+      testSession = live(builder(4))
     }
     testSession
+  }
+
+  /** A session from `b`, after dropping any stopped default or active
+    * session from Spark's registries — getOrCreate could otherwise hand
+    * the same corpse back. */
+  def live(b: SparkSession.Builder): SparkSession = {
+    if ((SparkSession.getDefaultSession ++ SparkSession.getActiveSession)
+        .exists(_.sparkContext.isStopped)) {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+    }
+    val s = b.getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
   }
 }

@@ -133,9 +133,7 @@ object Main {
     // GRAFT_SPLUNK_TOKEN, Sentry-like error capture iff
     // GRAFT_SENTRY_DSN + GRAFT_SENTRY_ENV.
     graft.telemetry.Telemetry.configure()
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.live(GraftSession.builder(GraftSession.cpus))
     spark.streams.addListener(new HealthListener())
     graft.telemetry.Telemetry.info(
       s"Starting graft on source=${cfg.source} -> keyed ordered sink " +

@@ -1,10 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
+import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  *   runMain graft.Verify <sfDir> <outDir> [k1,k2,…]
   *
   * HARDENED FOR A 260+ QUERY REGISTRY (the round-12 lesson:
   * CORRECTNESS_r12.json came back `{}` — the driver's run died mid-way
@@ -13,29 +15,30 @@ import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
   *  1. oracle_sql.json is written FIRST, before any query runs. If the
   *     run is killed at minute N, every parquet dumped before the kill
   *     still gets compared — a partial gate instead of an empty one.
-  *  2. Queries run in per-family CHUNKS on a fresh SparkSession each
-  *     (same discipline as Bench): one 260-query session accumulates
-  *     status-store state, broadcast/checkpoint blocks, and heap
-  *     fragmentation until late families run 3–8× slow — long enough
-  *     to blow an external time budget.
+  *  2. Queries run on the Families harness, one fresh session per chunk
+  *     (the same plan Bench times).
   *  3. Within a chunk, queries run on a small thread pool. Plan
   *     building under the family fixture locks serializes safely
-  *     (the getters are synchronized); execution overlaps, so the 32
+  *     (the getters are synchronized); execution overlaps, so the
   *     local cores aren't idled by one sub-second query at a time.
   *  4. Per-query wall time goes to stderr, so a killed run shows WHERE
   *     the budget went.
   */
 object Verify {
+
+  /** Parquet writes in flight per chunk. */
+  private val Writers = 4
+
+  /** Per-chunk ceiling: a wedged query must not take the remaining
+    * chunks down with it. */
+  private val ChunkTimeoutMin = 20L
+
   def main(args: Array[String]): Unit = {
-    // Optional 3rd arg: comma-separated query keys (dev-only filter;
-    // the driver always passes two args and gets the full dump).
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val chunkCap = sys.env.getOrElse("SPARK_GRAFT_VERIFY_CHUNK", "24").toInt
-    val par = sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "4").toInt
-    new java.io.File(outDir).mkdirs()
+    // Optional 3rd arg: a key filter; without it the dump covers every
+    // query.
+    val only = args.lift(2).map(_.split(",").toSet)
+    Files.createDirectories(Paths.get(outDir))
 
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -57,79 +60,33 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
-    val all = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
     val t00 = System.nanoTime()
-    // Global failure ledger: every failed/timed-out query lands here
-    // and is reported at the end (stderr summary + a marker file in
-    // outDir). Exit stays 0 BY DESIGN — the partial dump is the gate's
-    // value (kill at minute N still compares N minutes of parquet), so
-    // a flaky query must not zero the round; the marker file is the
-    // machine-readable failure signal.
-    val errs = new ConcurrentLinkedQueue[String]()
-    Families.chunked(all, chunkCap).foreach { chunk =>
-      // Chunk fault isolation (round-16, same guard as Bench): an
-      // executor OOM can stop the context and leave a dead default
-      // session; session creation must not throw out of main and kill
-      // the remaining chunks' evidence.
-      val sparkOpt =
-        try Some(GraftSession.builder(cpus).getOrCreate())
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] chunk session creation failed: ${e.getMessage}")
-          chunk.foreach { case (name, _) => errs.add(s"$name (no session)") }
-          scala.util.Try(
-            org.apache.spark.sql.SparkSession.getActiveSession.foreach(_.stop()))
-          scala.util.Try(org.apache.spark.sql.SparkSession.clearActiveSession())
-          scala.util.Try(org.apache.spark.sql.SparkSession.clearDefaultSession())
-          None
+    val run = Families.run("verify", sfDir, only)({ c =>
+      val pool = Executors.newFixedThreadPool(math.min(Writers, c.queries.size))
+      c.queries.foreach { case (name, fn) =>
+        pool.execute { () =>
+          val t0 = System.nanoTime()
+          if (c.attempt(name)(fn(c.spark, sfDir).coalesce(1).write
+              .mode("overwrite").parquet(s"$outDir/$name")))
+            System.err.println(
+              f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
         }
-      sparkOpt.foreach { spark =>
-      spark.sparkContext.setLogLevel("WARN")
-      val pool = Executors.newFixedThreadPool(math.max(1, math.min(par, chunk.size)))
-      val submitted = new ConcurrentLinkedQueue[String]()
-      chunk.foreach { case (name, fn) =>
-        submitted.add(name)
-        pool.submit(new Runnable {
-          def run(): Unit = {
-            val t0 = System.nanoTime()
-            try {
-              fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-                .parquet(s"$outDir/$name")
-              submitted.remove(name)
-              System.err.println(
-                f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
-            } catch { case e: Throwable =>
-              submitted.remove(name)
-              errs.add(name)
-              System.err.println(s"[verify] $name failed: ${e.getMessage}")
-            }
-          }
-        })
       }
       pool.shutdown()
-      // Generous per-chunk ceiling; a wedged query must not take the
-      // remaining chunks down with it.
-      if (!pool.awaitTermination(20, TimeUnit.MINUTES)) {
-        System.err.println(s"[verify] chunk timed out; abandoning stragglers")
+      if (!pool.awaitTermination(ChunkTimeoutMin, TimeUnit.MINUTES)) {
         pool.shutdownNow()
-        // Whatever never finished is a failure too — name it.
-        submitted.forEach(n => errs.add(s"$n (timeout)"))
+        throw new TimeoutException(s"chunk ran past $ChunkTimeoutMin min")
       }
-      Families.invalidateFixtures()
-      spark.stop()
-      }
-      System.gc()
-    }
-    val failed = {
-      val it = errs.iterator(); val b = Seq.newBuilder[String]
-      while (it.hasNext) b += it.next(); b.result().sorted
-    }
+    })
+    val failed = run.failed.toSeq.sorted
+    val all = SparkEntry.queries.keys.count(k => only.forall(_.contains(k)))
     // Machine-readable failure marker: present (and non-empty) IFF any
     // query failed or timed out. Written last so its absence on a
-    // killed run means "unknown", not "clean". Re-create outDir first:
-    // if EVERY query failed before its parquet write (e.g. a bad
-    // sfDir), nothing below outDir exists yet and the summary write
-    // itself would throw, losing the failure evidence.
+    // killed run means "unknown", not "clean". Exit stays 0 BY DESIGN —
+    // the partial dump is the gate's value, so a flaky query must not
+    // zero the round. Re-create outDir first: if EVERY query failed
+    // before its parquet write (e.g. a bad sfDir), the summary write
+    // itself would otherwise throw, losing the failure evidence.
     Files.createDirectories(Paths.get(outDir))
     Files.writeString(Paths.get(s"$outDir/failed_queries.json"),
       failed.map(q).mkString("[", ",", "]"))
@@ -138,6 +95,6 @@ object Verify {
         failed.mkString(", "))
     System.err.println(
       f"[verify] all chunks done in ${(System.nanoTime() - t00) / 1e9}%.0fs " +
-        s"(${all.size - failed.size}/${all.size} ok)")
+        s"(${all - failed.size}/$all ok)")
   }
 }

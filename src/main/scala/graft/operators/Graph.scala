@@ -103,15 +103,13 @@ object Graph {
       converged = prev.contains(m)
       prev = Some(m)
       rounds += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[$opName] round $rounds measure=$m converged=$converged")
     }
     // Always-on convergence readout (round-16): adjudicating whether an
     // iterative op scales (dedup_cluster's sf1 wall, CC round growth
     // with component diameter) needs rounds-to-fixpoint visible in
-    // every run's stderr, not only under GRAFT_CC_DEBUG. One line per
-    // iterate() call — if rounds grow with the data decade, that is
-    // the pointer-jumping signal; if they hold, the wall is row volume.
+    // every run's stderr. One line per iterate() call — if rounds grow
+    // with the data decade, that is the pointer-jumping signal; if they
+    // hold, the wall is row volume.
     System.err.println(s"[iterate] $opName rounds=$rounds converged=$converged")
     require(converged, s"$opName: did not converge in $maxRounds rounds")
     synchronized {

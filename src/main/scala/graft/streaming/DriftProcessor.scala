@@ -77,9 +77,12 @@ object DriftProcessor {
   def scored(points: Dataset[(Long, Long, Long)], minN: Int = 10,
       zThresholdX100: Long = 300L): Dataset[DriftPoint] = {
     import points.sparkSession.implicits._
+    // TimeMode.None: no timers and no TTL, so a run-once (AvailableNow)
+    // backfill ends with its input; ProcessingTime would schedule
+    // no-data batches forever.
     points
       .groupByKey(_._1)
       .transformWithState(new DriftProcessor(minN, zThresholdX100),
-        TimeMode.ProcessingTime, OutputMode.Append, Encoders.product[DriftPoint])
+        TimeMode.None(), OutputMode.Append, Encoders.product[DriftPoint])
   }
 }

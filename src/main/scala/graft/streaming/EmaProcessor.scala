@@ -56,9 +56,12 @@ object EmaProcessor {
   def smoothed(points: Dataset[(Long, Long, Long)], alpha: Double = 0.3)
       : Dataset[EmaPoint] = {
     import points.sparkSession.implicits._
+    // TimeMode.None: no timers and no TTL, so a run-once (AvailableNow)
+    // backfill ends with its input; ProcessingTime would schedule
+    // no-data batches forever.
     points
       .groupByKey(_._1)
       .transformWithState(new EmaProcessor(alpha),
-        TimeMode.ProcessingTime, OutputMode.Append, Encoders.product[EmaPoint])
+        TimeMode.None(), OutputMode.Append, Encoders.product[EmaPoint])
   }
 }

@@ -71,20 +71,24 @@ object OcsPipeline {
 
   /** Full pipeline: frames → drop heartbeats → CloudEvent columns.
     * Uses the faithful sha1 id (CloudEventId.sha1Base64). */
-  def cloudEvents(packets: DataFrame): DataFrame = {
+  def cloudEvents(packets: DataFrame): DataFrame =
+    projected(frames(packets).filter(col("message") =!= "HEARTBEAT"), None)
+
+  /** The CloudEvent columns over framed rows (connId, sourceIp,
+    * receiveTs, pos, message). With `kind`, only rows of kind "frame"
+    * get an id, and the kind column rides along before receiveTs. */
+  private def projected(framed: DataFrame, kind: Option[Column]): DataFrame = {
     val timeIso = date_format(col("receiveTs"), isoFmt)
-    frames(packets)
-      .filter(col("message") =!= "HEARTBEAT")
-      .select(
-        CloudEventId.sha1Base64(timeIso, col("message")).as("id"),
-        col("connId").as("partitionkey"),
-        col("sourceIp").as("sourceip"),
-        timeIso.as("time"),
-        lit("com.mbta.ocs.raw_message").as("type"),
-        lit("1.0").as("specversion"),
-        lit(eventSource).as("source"),
-        col("message").as("raw"),
-        col("receiveTs"), col("pos"))
+    val id = CloudEventId.sha1Base64(timeIso, col("message"))
+    framed.select(Seq(
+      kind.fold(id)(k => when(k === "frame", id)).as("id"),
+      col("connId").as("partitionkey"),
+      col("sourceIp").as("sourceip"),
+      timeIso.as("time"),
+      lit("com.mbta.ocs.raw_message").as("type"),
+      lit("1.0").as("specversion"),
+      lit(eventSource).as("source"),
+      col("message").as("raw")) ++ kind ++ Seq(col("receiveTs"), col("pos")): _*)
   }
 
   /** Canonical JSON encoding (alphabetical keys, Jason parity over the
@@ -102,25 +106,12 @@ object OcsPipeline {
     * receiveTs. Stale markers pass through with kind="stale" so a
     * monitoring sink can split them off. */
   def statefulCloudEvents(packets: org.apache.spark.sql.Dataset[RawPacket],
-    staleTimeoutMs: Long): DataFrame = {
-    val timeIso = date_format(col("receiveTs"), isoFmt)
+    staleTimeoutMs: Long): DataFrame =
     // timestamp_micros, not _millis: the id is content-addressed over
     // the formatted time, so truncating here would give the stateful
     // and stateless variants different ids for the same packet.
-    StatefulFraming.frames(packets, staleTimeoutMs).toDF()
+    projected(StatefulFraming.frames(packets, staleTimeoutMs).toDF()
       .withColumn("receiveTs", expr("timestamp_micros(receiveMicros)"))
-      .filter(col("kind") === "stale" || col("message") =!= "HEARTBEAT")
-      .select(
-        when(col("kind") === "frame",
-          graft.functions.CloudEventId.sha1Base64(timeIso, col("message")))
-          .as("id"),
-        col("connId").as("partitionkey"),
-        col("sourceIp").as("sourceip"),
-        timeIso.as("time"),
-        lit("com.mbta.ocs.raw_message").as("type"),
-        lit("1.0").as("specversion"),
-        lit(eventSource).as("source"),
-        col("message").as("raw"),
-        col("kind"), col("receiveTs"), col("pos"))
-  }
+      .filter(col("kind") === "stale" || col("message") =!= "HEARTBEAT"),
+      Some(col("kind")))
 }

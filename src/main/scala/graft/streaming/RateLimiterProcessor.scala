@@ -69,11 +69,14 @@ object RateLimiterProcessor {
       capacityTokens: Long = 10L,
       refillPerSecMilli: Long = 1000L): Dataset[RateDecision] = {
     import events.sparkSession.implicits._
+    // TimeMode.None: no timers and no TTL, so a run-once (AvailableNow)
+    // backfill ends with its input; ProcessingTime would schedule
+    // no-data batches forever.
     events
       .groupByKey(_._1)
       .transformWithState(
         new RateLimiterProcessor(capacityTokens, refillPerSecMilli),
-        TimeMode.ProcessingTime, OutputMode.Append,
+        TimeMode.None(), OutputMode.Append,
         Encoders.product[RateDecision])
   }
 }

@@ -171,18 +171,4 @@ class Round18OpsSpec extends AnyFunSuite {
       assert(got == naive(arr, winW, 20), s"n=$n winW=$winW")
     }
   }
-
-  // ── GraftSession.test: rebuilds after a stopped context ──
-  test("shared test session rebuilds when its context is stopped") {
-    val s1 = GraftSession.test
-    assert(!s1.sparkContext.isStopped)
-    assert(GraftSession.test eq s1) // stable while alive
-    s1.stop()
-    Families.invalidateFixtures() // drop fixtures bound to the corpse
-    val s2 = GraftSession.test
-    assert(s2 ne s1)
-    assert(!s2.sparkContext.isStopped)
-    // and it works
-    assert(s2.range(3).count() == 3)
-  }
 }

@@ -65,18 +65,20 @@ class TransformWithStateSpec extends AnyFunSuite {
   }
 
   test("MapState frequency counts accumulate across a checkpointed restart") {
-    // NOTE on draining: with TimeMode.ProcessingTime the state
-    // operator always reports it may have expired timers, so a
-    // continuous-trigger query re-batches forever and
-    // processAllAvailable never quiesces. AvailableNow is the correct
-    // drain primitive — and restarting from the checkpoint between
-    // phases additionally proves MapState survives recovery.
+    // NOTE on draining: the processing-time TTL makes the state
+    // operator ask for a no-data batch after every batch, so neither
+    // processAllAvailable nor an AvailableNow run would ever end. With
+    // no-data batches off, an AvailableNow run ends with its input (TTL
+    // eviction then happens in data batches only) — and restarting from
+    // the checkpoint between phases additionally proves MapState
+    // survives recovery.
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = java.nio.file.Files
       .createTempDirectory("tws_freq_ckpt").toString
+    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     try {
       import spark.implicits._
       implicit val ctx = spark.sqlContext
@@ -92,7 +94,8 @@ class TransformWithStateSpec extends AnyFunSuite {
           .foreachBatch { (df: org.apache.spark.sql.Dataset[graft.streaming.FreqCount], _: Long) =>
             df.collect().foreach(buf.add)
           }.start()
-        try q.awaitTermination(120000L) finally q.stop()
+        try assert(q.awaitTermination(120000L), "AvailableNow drain must terminate")
+        finally q.stop()
       }
       in.addData(("click", 1L), ("click", 1L), ("view", 2L))
       drain()
@@ -105,6 +108,7 @@ class TransformWithStateSpec extends AnyFunSuite {
       assert(latest(("click", 3L)) == 1L)
       assert(latest(("view", 2L)) == 1L)
     } finally {
+      spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
       prev match {
         case Some(v) => spark.conf.set(key, v)
         case None => spark.conf.unset(key)
@@ -135,7 +139,8 @@ class TransformWithStateSpec extends AnyFunSuite {
           .foreachBatch { (df: org.apache.spark.sql.Dataset[EmaPoint], _: Long) =>
             df.collect().foreach(buf.add)
           }.start()
-        try q.awaitTermination(120000L) finally q.stop()
+        try assert(q.awaitTermination(120000L), "AvailableNow drain must terminate")
+        finally q.stop()
       }
       // One trigger with out-of-order event ids (must fold 1,2 in id
       // order), then a restart carrying the state forward.
@@ -167,6 +172,7 @@ class TransformWithStateSpec extends AnyFunSuite {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = java.nio.file.Files
       .createTempDirectory("tws_seed_ckpt").toString
+    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     try {
       import spark.implicits._
       implicit val ctx = spark.sqlContext
@@ -183,7 +189,8 @@ class TransformWithStateSpec extends AnyFunSuite {
         .foreachBatch { (df: org.apache.spark.sql.Dataset[FreqCount], _: Long) =>
           df.collect().foreach(buf.add)
         }.start()
-      try q.awaitTermination(120000L) finally q.stop()
+      try assert(q.awaitTermination(120000L), "AvailableNow drain must terminate")
+      finally q.stop()
       val latest = buf.toArray(Array.empty[FreqCount])
         .groupBy(r => (r.group, r.member))
         .map { case (k, rs) => k -> rs.map(_.n).max }
@@ -194,6 +201,7 @@ class TransformWithStateSpec extends AnyFunSuite {
       // Update mode.
       assert(!latest.contains(("view", 9L)))
     } finally {
+      spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
       prev match {
         case Some(v) => spark.conf.set(key, v)
         case None => spark.conf.unset(key)
@@ -268,11 +276,8 @@ class TransformWithStateSpec extends AnyFunSuite {
           .foreachBatch { (df: org.apache.spark.sql.Dataset[DriftPoint], _: Long) =>
             df.collect().foreach(buf.add)
           }.start()
-        // AvailableNow + awaitTermination, NOT processAllAvailable:
-        // under TimeMode.ProcessingTime the state operator never
-        // quiesces for processAllAvailable (see the NOTE on the
-        // MapState test above).
-        try q.awaitTermination(120000L) finally q.stop()
+        try assert(q.awaitTermination(120000L), "AvailableNow drain must terminate")
+        finally q.stop()
       }
       // 12 stable points (alternating 990/1010 around 1000)…
       in.addData((1 to 12).map(i =>
@@ -335,7 +340,8 @@ class TransformWithStateSpec extends AnyFunSuite {
       .foreachBatch { (df: org.apache.spark.sql.Dataset[DriftPoint], _: Long) =>
         df.collect().foreach(buf.add)
       }.start()
-    try q.awaitTermination(120000L) finally q.stop()
+    try assert(q.awaitTermination(120000L), "AvailableNow drain must terminate")
+    finally q.stop()
     val got = buf.toArray(Array.empty[DriftPoint])
       .map(p => p.eventId -> p).toMap
     assert(got.size == 27)
@@ -366,9 +372,8 @@ class TransformWithStateSpec extends AnyFunSuite {
       import graft.streaming.RateDecision
       val in = MemoryStream[(String, Long, Long)]
       val buf = new java.util.concurrent.ConcurrentLinkedQueue[RateDecision]()
-      // AvailableNow + awaitTermination, NOT processAllAvailable (the
-      // ProcessingTime quiescence note above); each drain is a fresh
-      // checkpointed run, so cross-drain carry IS restart recovery.
+      // Each drain is a fresh checkpointed run, so cross-drain carry IS
+      // restart recovery.
       def drain(): Unit = {
         val q = graft.streaming.RateLimiterProcessor
           .decisions(in.toDS(), capacityTokens = 2L, refillPerSecMilli = 1000L)
@@ -378,7 +383,8 @@ class TransformWithStateSpec extends AnyFunSuite {
           .foreachBatch { (df: org.apache.spark.sql.Dataset[RateDecision], _: Long) =>
             df.collect().foreach(buf.add)
           }.start()
-        try q.awaitTermination(120000L) finally q.stop()
+        try assert(q.awaitTermination(120000L), "AvailableNow drain must terminate")
+        finally q.stop()
       }
       // Burst of 3 at t=0: the 2-token bucket admits 2, sheds 1.
       in.addData(("c1", 1L, 0L), ("c1", 2L, 0L), ("c1", 3L, 0L))
