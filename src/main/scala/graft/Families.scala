@@ -117,19 +117,14 @@ object Families {
     r
   }
 
-  /** Drop chunk-scoped fixture references into the dying context so a
-    * stop()+gc() actually releases their blocks. */
-  def invalidateFixtures(): Unit = {
-    graft.operators.Dedup.invalidate()
-    graft.operators.Trike.invalidate()
-    graft.operators.Graph.invalidate()
-    graft.operators.Similarity.invalidate()
-  }
+  /** Release the chunk's fixtures and retained result blocks
+    * (`Checkpoints.invalidate`) so a stop()+gc() actually frees them. */
+  def invalidateFixtures(): Unit = graft.operators.Checkpoints.invalidate()
 
   /** Fixture-build ledger (the round-13 fix for fixture attribution):
-    * each session-scoped fixture getter records (name, seconds) here
-    * when it actually BUILDS — memoized hits record nothing — so Bench
-    * can report fixture builds as their own line items instead of
+    * `Checkpoints.fixture` records (name, seconds) here when it actually
+    * BUILDS — memoized hits record nothing — so Bench can report
+    * fixture builds as their own line items instead of
     * charging them to whichever query touches the fixture first in its
     * chunk (round-13's driver-vs-builder "regressions" were exactly
     * such attribution flips: graph_clustering 0.55 s vs 3.78 s, same
@@ -147,13 +142,5 @@ object Families {
     var e = fixtureTimes.poll()
     while (e != null) { b += e; e = fixtureTimes.poll() }
     b.result()
-  }
-
-  /** Time `build`, record it in the ledger, return its result. */
-  def timedFixture[A](name: String)(build: => A): A = {
-    val t0 = System.nanoTime()
-    val r = build
-    recordFixtureBuild(name, (System.nanoTime() - t0) / 1e9)
-    r
   }
 }

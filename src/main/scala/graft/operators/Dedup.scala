@@ -182,86 +182,27 @@ object Dedup {
   private def bandHash(m: Int => Column): Column =
     (0 until 4).map(m).reduce((acc, x) => acc * 31 + x)
 
-  /** Session-shared MinHash fixture: signatures + banded candidate
-    * pairs, keyed by (session, dir). Seven queries branch off this
-    * prefix (dedup_minhash_lsh, dedup_cluster, dedup_incremental and
-    * the four graph_* analytics) — in a production dedup pipeline the
-    * signature table and the candidate pair graph are materialization
-    * points (computed once per corpus snapshot, read by every
-    * downstream consumer), so the batch twins share one
-    * materialization per (session, dir) too. localCheckpoint rather
-    * than persist: a durable materialization with explicit release
-    * (the predecessor's blocks are dropped when the key changes), not
-    * an advisory cache entry — same discipline as Trike's frames
-    * fixture and Graph.iterate.
-    *
-    * SEQUENTIAL-EXECUTION ASSUMPTION: a dir switch invalidates the
-    * (lazy) frames the previous dir's queries returned but haven't
-    * executed yet. Run each returned frame's action before requesting
-    * the next query (Verify/Bench do), or persist results you intend
-    * to interleave. Two further caveats of the (session, dir) key:
-    * the fixture serves the signatures AS OF first touch — if the
-    * parquet under `dir` is rewritten in place within a session, call
-    * `invalidate()` (specs that regenerate data must); and the last
-    * session is held strongly until the next key switch or an
-    * explicit `invalidate()` on session stop. */
-  private var fixture: Option[((SparkSession, String), DataFrame, DataFrame,
-    Seq[org.apache.spark.rdd.RDD[_]])] = None
-
-  /** Drop the shared fixtures and release their checkpoint blocks —
-    * for callers that rewrite the corpus dir in place or stop the
-    * owning session. Safe to call when nothing is cached. */
-  def invalidate(): Unit = synchronized {
-    fixture.foreach { case (_, _, _, rdds) =>
-      rdds.foreach(r => scala.util.Try(r.unpersist(blocking = false)))
-    }
-    fixture = None
-    shFixture.foreach { case (_, _, rdds) =>
-      rdds.foreach(r => scala.util.Try(r.unpersist(blocking = false)))
-    }
-    shFixture = None
-  }
-
-  /** Session-shared tokenized-shingle fixture: the exploded
-    * (doc_id, n_sh, shingle, h60) rows every shingle-based operator
-    * starts from — h60 is the md5-derived 60-bit shingle hash (h31 =
-    * h60 mod p reuses it). This is the FIRST materialization point of
-    * a dedup pipeline: tokenize+shingle+md5 is the scan-dominating
-    * cost, computed once per corpus snapshot and read by ngram
-    * Jaccard, containment, SimHash, the MinHash signature build and
-    * decontamination alike. Same (session, dir) keying, predecessor
-    * release and SEQUENTIAL-EXECUTION caveats as the signature
-    * fixture above. */
-  private var shFixture: Option[((SparkSession, String), DataFrame,
-    Seq[org.apache.spark.rdd.RDD[_]])] = None
-
+  /** Session-shared tokenized-shingle fixture (`dedup_shingles`): the
+    * exploded (doc_id, n_sh, shingle, h60) rows every shingle-based
+    * operator starts from — h60 is the md5-derived 60-bit shingle hash
+    * (h31 = h60 mod p reuses it). This is the FIRST materialization
+    * point of a dedup pipeline: tokenize+shingle+md5 is the
+    * scan-dominating cost, computed once per corpus snapshot and read by
+    * ngram Jaccard, containment, SimHash, the MinHash signature build and
+    * decontamination alike, so the batch twins share one materialization
+    * per (session, dir) too (`Checkpoints.fixture`). */
   private[operators] def shingleRows(spark: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val key = (spark, dir)
-      shFixture match {
-        case Some((k, df, _)) if k == key => df
-        case prev =>
-          prev.foreach { case (_, _, rdds) =>
-            rdds.foreach(r => scala.util.Try(r.unpersist(blocking = false)))
-          }
-          // explode_outer: see dedupNgramJaccard note. Materialized
-          // eagerly under a timed-fixture ledger entry so the build
-          // cost is attributed to the FIXTURE, not the first consumer
-          // query (Families.recordFixtureBuild).
-          val rows = graft.Families.timedFixture("dedup_shingles") {
-            val r = docShingles(spark, dir)
-              .select(col("doc_id"), col("n_sh"),
-                explode_outer(col("sh")).as("shingle"))
-              .filter(col("shingle").isNotNull)
-              .withColumn("h60",
-                conv(substring(md5(col("shingle")), 1, 15), 16, 10).cast("long"))
-              .localCheckpoint(eager = false)
-            r.count()
-            r
-          }
-          shFixture = Some((key, rows, Graph.ckptRdds(rows)))
-          rows
-      }
+    Checkpoints.fixture("dedup_shingles", spark, dir) {
+      // explode_outer: see dedupNgramJaccard note.
+      val r = docShingles(spark, dir)
+        .select(col("doc_id"), col("n_sh"),
+          explode_outer(col("sh")).as("shingle"))
+        .filter(col("shingle").isNotNull)
+        .withColumn("h60",
+          conv(substring(md5(col("shingle")), 1, 15), 16, 10).cast("long"))
+        .localCheckpoint(eager = false)
+      r.count()
+      r
     }
 
   /** One (doc_id, band, bh) row per band — the LSH band index. */
@@ -272,54 +213,50 @@ object Dedup {
 
   /** Signatures + banded candidate pairs — shared by dedupMinhashLsh
     * (which adds the estimated-similarity verify columns) and
-    * dedupCluster (which only needs the pair graph). */
+    * dedupCluster (which only needs the pair graph). Seven queries
+    * branch off this prefix (dedup_minhash_lsh, dedup_cluster,
+    * dedup_incremental and the four graph_* analytics): in a production
+    * dedup pipeline the signature table and the candidate pair graph
+    * are materialization points, computed once per corpus snapshot and
+    * read by every downstream consumer, so both are fixtures
+    * (`dedup_signatures`, `dedup_pair_graph`), always built together. */
   private def minhashSigsAndCand(
-      spark: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
-    val key = (spark, dir)
-    fixture match {
-      case Some((k, sigs, cand, _)) if k == key => (sigs, cand)
-      case prev =>
-        prev.foreach { case (_, _, _, rdds) =>
-          rdds.foreach(r => scala.util.Try(r.unpersist(blocking = false)))
-        }
-        val hashRows = shingleRows(spark, dir)
-          .select(col("doc_id"), (col("h60") % P31).as("h")) // = h31(shingle)
-        // Signatures are referenced 4× downstream (banded self-join ×2,
-        // sx, sy); without a materialization Spark re-runs the whole
-        // shingle→hash→64-min aggregate per reference. At 100 TB
-        // signatures are a materialization point by design — a few
-        // hundred bytes/doc versus re-tokenizing the corpus.
-        val sigs = graft.Families.timedFixture("dedup_signatures") {
-          val s = hashRows
-            .groupBy(col("doc_id"))
-            .agg(
-              min((col("h") * permCoef(0)._1 + permCoef(0)._2) % P31).as("m0"),
-              (1 until nPerms).map { j =>
-                min((col("h") * permCoef(j)._1 + permCoef(j)._2) % P31).as(s"m$j")
-              }: _*)
-            .localCheckpoint(eager = false)
-          s.count()
-          s
-        }
-        val banded = bandedOf(sigs)
-        // The pair graph too: cand is the second materialization point
-        // (bounded by duplicate density, far smaller than the corpus) —
-        // the four graph_* analytics read it without re-running the
-        // banded self-join.
-        val cand = graft.Families.timedFixture("dedup_pair_graph") {
-          val c = banded.as("a").join(banded.as("b"),
-              col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-                col("a.doc_id") < col("b.doc_id"))
-            .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-            .agg(count(lit(1)).as("n_bands"))
-            .localCheckpoint(eager = false)
-          c.count()
-          c
-        }
-        fixture = Some((key, sigs, cand,
-          Graph.ckptRdds(sigs) ++ Graph.ckptRdds(cand)))
-        (sigs, cand)
+      spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val hashRows = shingleRows(spark, dir)
+      .select(col("doc_id"), (col("h60") % P31).as("h")) // = h31(shingle)
+    // Signatures are referenced 4× downstream (banded self-join ×2,
+    // sx, sy); without a materialization Spark re-runs the whole
+    // shingle→hash→64-min aggregate per reference. At 100 TB
+    // signatures are a materialization point by design — a few
+    // hundred bytes/doc versus re-tokenizing the corpus.
+    val sigs = Checkpoints.fixture("dedup_signatures", spark, dir) {
+      val s = hashRows
+        .groupBy(col("doc_id"))
+        .agg(
+          min((col("h") * permCoef(0)._1 + permCoef(0)._2) % P31).as("m0"),
+          (1 until nPerms).map { j =>
+            min((col("h") * permCoef(j)._1 + permCoef(j)._2) % P31).as(s"m$j")
+          }: _*)
+        .localCheckpoint(eager = false)
+      s.count()
+      s
     }
+    // The pair graph too: cand is the second materialization point
+    // (bounded by duplicate density, far smaller than the corpus) —
+    // the four graph_* analytics read it without re-running the
+    // banded self-join.
+    val cand = Checkpoints.fixture("dedup_pair_graph", spark, dir) {
+      val banded = bandedOf(sigs)
+      val c = banded.as("a").join(banded.as("b"),
+          col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
+            col("a.doc_id") < col("b.doc_id"))
+        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        .agg(count(lit(1)).as("n_bands"))
+        .localCheckpoint(eager = false)
+      c.count()
+      c
+    }
+    (sigs, cand)
   }
 
   // ─── dedup_lsh_tuning: band/row operating points of the 64-perm sketch ───

@@ -1,125 +1,18 @@
 package graft.operators
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** Iterative DataFrame fixpoint loops with checkpoint-block hygiene,
-  * plus the graph operators built on them (connected components over
-  * the near-duplicate pair graph).
-  *
-  * The iterative-DataFrame pattern needs a lineage truncation per
-  * round (else the plan doubles every iteration), and localCheckpoint
-  * is the cheap way to get one — but each checkpoint materializes RDD
-  * blocks that the ContextCleaner releases only lazily. Round 4
-  * measured the cost of skipping explicit cleanup: leaked blocks from
-  * dedup_cluster's loop degraded an unrelated downstream query 6×.
-  * `iterate` therefore releases round N−1's blocks as soon as round N
-  * is materialized (the convergence action doubles as the
-  * materializer, one Spark job per round), and keeps only the FINAL
-  * round's blocks — which the returned frame still depends on —
-  * retiring them at the next `iterate` call, mirroring the
-  * predecessor-unpersist discipline of Dedup's signature cache.
+import Checkpoints.{Converge, EarlyStop, FixedRounds, iterate, retain}
+
+/** The graph operators: connected components over the near-duplicate
+  * pair graph and the analytics built on it, plus the event-type
+  * transition graph's SCC family. Iterative ones run on
+  * `Checkpoints.iterate`, which owns their checkpoint blocks.
   */
 object Graph {
-
-  /** Blocks backing returned frames; they must outlive the callers'
-    * actions. Released ONLY at invalidate() (the Verify/Bench chunk
-    * boundary, where the owning session is about to stop): the
-    * earlier release-on-next-iterate() scheme assumed sequential
-    * execution, and under Verify's intra-chunk thread pool query B
-    * entering iterate() would unpersist query A's final-round blocks
-    * while A's parquet write was still consuming them — localCheckpoint
-    * truncates lineage, so the blocks are unrecoverable and A fails
-    * (observed as a flaky graph_closeness drop in round 13). Retention
-    * is bounded: ≤ one family chunk's results (each edge-set-sized, not
-    * corpus-sized) per session. */
-  private var retired: Seq[RDD[_]] = Nil
-
-  /** The checkpoint RDDs a frame's plan rests on (a lazily
-    * localCheckpoint'ed Dataset plans as a LogicalRDD). Shared with
-    * Trike's session-scoped fixture cache, which uses the same
-    * materialize-then-release discipline. */
-  private[graft] def ckptRdds(df: DataFrame): Seq[RDD[_]] =
-    df.queryExecution.logical.collect { case l: LogicalRDD => l.rdd }
-
-  // Try-wrapped like Dedup.invalidate: the retired blocks may belong
-  // to a session that has since been STOPPED (Bench recycles sessions
-  // per chunk; dedup_cluster's last round can be the previous chunk's
-  // session), and unpersist on a stopped context throws from the
-  // driver-endpoint lookup — which would fail the NEXT iterative query
-  // before it even builds, and leave `retired` stuck mid-release.
-  private def releaseRetired(): Unit = synchronized {
-    retired.foreach(r => scala.util.Try(r.unpersist(blocking = false)))
-    retired = Nil
-  }
-
-  /** Drop references to the last returned frame's blocks — for callers
-    * that stop the owning session (Bench's chunk recycle).
-    *
-    * LONG-LIVED-SESSION CONTRACT: a session that runs iterative graph
-    * queries indefinitely without ever calling this (or
-    * Families.invalidateFixtures) accumulates one final-round block
-    * set per iterate() call — each edge-set-sized, never corpus-sized,
-    * but unbounded in count. Library users embedding these operators
-    * in a resident service must invalidate() at their own batch
-    * boundaries, exactly as Verify/Bench do per chunk. As a backstop,
-    * retired entries whose owning SparkContext has stopped are pruned
-    * automatically (their blocks died with the context; only the
-    * references leak). */
-  def invalidate(): Unit = synchronized {
-    releaseRetired()
-    sccFixture.foreach { case (_, _, rdds) =>
-      rdds.foreach(r => scala.util.Try(r.unpersist(blocking = false)))
-    }
-    sccFixture = None
-  }
-
-  /** Run `step` to a fixpoint: halts when `measure` (ONE action per
-    * round — it is also what materializes the round's lazy checkpoint)
-    * returns the same value twice in a row. Fails loudly at
-    * `maxRounds` rather than returning a partial fixpoint. Frames
-    * `step` references besides its argument (e.g. the edge set) should
-    * be persisted by the caller — they are re-read every round. */
-  def iterate[S](init: DataFrame, maxRounds: Int, opName: String)(
-      step: DataFrame => DataFrame)(measure: DataFrame => S): DataFrame = {
-    var cur = init.localCheckpoint(eager = false)
-    var curRdds = ckptRdds(cur)
-    var prev: Option[S] = None
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      val next = step(cur).localCheckpoint(eager = false)
-      val nextRdds = ckptRdds(next)
-      val m = measure(next)
-      // `next` is self-contained once measured; the previous round's
-      // blocks are dead weight from here on.
-      curRdds.foreach(_.unpersist(blocking = false))
-      cur = next
-      curRdds = nextRdds
-      converged = prev.contains(m)
-      prev = Some(m)
-      rounds += 1
-    }
-    // Always-on convergence readout (round-16): adjudicating whether an
-    // iterative op scales (dedup_cluster's sf1 wall, CC round growth
-    // with component diameter) needs rounds-to-fixpoint visible in
-    // every run's stderr. One line per iterate() call — if rounds grow
-    // with the data decade, that is the pointer-jumping signal; if they
-    // hold, the wall is row volume.
-    System.err.println(s"[iterate] $opName rounds=$rounds converged=$converged")
-    require(converged, s"$opName: did not converge in $maxRounds rounds")
-    synchronized {
-      // Prune entries from stopped contexts (Bench chunk recycle):
-      // their blocks are already gone, the references would pile up.
-      retired = retired.filterNot(r =>
-        scala.util.Try(r.sparkContext.isStopped).getOrElse(true)) ++ curRdds
-    }
-    cur
-  }
 
   /** Connected components by min-label propagation with
     * pointer jumping — the DataFrame rendition of the alternating
@@ -155,7 +48,7 @@ object Graph {
     // order-insensitive, so join strategy cannot change any output
     // bit. Above the cap: SMJ everywhere, unchanged.
     val small = init.count() <= bcastRowCap
-    iterate(init, maxRounds, opName) { labels =>
+    iterate(init, maxRounds, opName, Converge) { labels =>
       val nbrMin = edges.join(bcastIf(labels, small),
           edges("src") === labels("node"))
         .groupBy(col("dst")).agg(min(col("lbl")).as("nlbl"))
@@ -208,47 +101,6 @@ object Graph {
        |FROM sizes s JOIN ec ON s.cluster_id = ec.cluster_id
        |ORDER BY s.cluster_id""".stripMargin
 
-  /** Capped early-stop sibling of `iterate` (round 17, guide §1.2 —
-    * don't compute things you throw away): runs `step` at most
-    * `rounds` times but STOPS as soon as `measure` repeats, without
-    * `iterate`'s converged requirement. ONLY SOUND when the caller
-    * can prove "measure repeat ⇒ step is identity from here on" —
-    * true for the monotone peels (kcore/ktruss: step output ⊆ input,
-    * so an unchanged count means an unchanged set; coreness: per-node
-    * h-index values are monotone non-increasing from c₀ = deg, so an
-    * unchanged sum means every node is unchanged). Because converged
-    * rounds are identities, stopping early is bit-identical to the
-    * fixed unroll the DuckDB twins replay; at the test SFs these
-    * peels converge in 1–4 rounds while the fixed caps are 3–12, so
-    * this removes most of the per-round job/shuffle floor. `measure`
-    * is the round's ONE action (it also materializes the lazy
-    * checkpoint), exactly like `iterate`. */
-  def iterateUpTo[S](init: DataFrame, rounds: Int, opName: String)(
-      step: DataFrame => DataFrame)(measure: DataFrame => S): DataFrame = {
-    var cur = init.localCheckpoint(eager = false)
-    var curRdds = ckptRdds(cur)
-    var prev: Option[S] = None
-    var done = false
-    var r = 0
-    while (!done && r < rounds) {
-      val next = step(cur).localCheckpoint(eager = false)
-      val nextRdds = ckptRdds(next)
-      val m = measure(next)
-      curRdds.foreach(_.unpersist(blocking = false))
-      cur = next
-      curRdds = nextRdds
-      done = prev.contains(m)
-      prev = Some(m)
-      r += 1
-    }
-    System.err.println(s"[iterate] $opName rounds=$r/$rounds earlyStop=$done")
-    synchronized {
-      retired = retired.filterNot(rd =>
-        scala.util.Try(rd.sparkContext.isStopped).getOrElse(true)) ++ curRdds
-    }
-    cur
-  }
-
   /** Broadcast hint gated on a MEASURED row count (guide §3.1: hint
     * when you KNOW a side is small — the iterative loops' state frames
     * are RDD-backed after localCheckpoint, their size estimate
@@ -263,27 +115,6 @@ object Graph {
   private[operators] val bcastRowCap = 2L * 1000 * 1000
   private[operators] def bcastIf(df: DataFrame, small: Boolean): DataFrame =
     if (small) broadcast(df) else df
-
-  /** Fixed-round sibling of `iterate` with the same checkpoint-block
-    * hygiene: each round is lazily localCheckpoint'ed, materialized by
-    * ONE count job, and round N−1's blocks are released as soon as
-    * round N is live. For algorithms whose round count is part of the
-    * semantics (power iteration) rather than a convergence test. */
-  def iterateRounds(init: DataFrame, rounds: Int)(
-      step: DataFrame => DataFrame): DataFrame = {
-    var cur = init.localCheckpoint(eager = false)
-    var curRdds = ckptRdds(cur)
-    for (_ <- 1 to rounds) {
-      val next = step(cur).localCheckpoint(eager = false)
-      val nextRdds = ckptRdds(next)
-      next.count() // materialize this round's checkpoint blocks
-      curRdds.foreach(_.unpersist(blocking = false))
-      cur = next
-      curRdds = nextRdds
-    }
-    synchronized { retired = retired ++ curRdds }
-    cur
-  }
 
   // ─── graph_degrees: degree histogram of the pair graph ───
   // The first diagnostic over any similarity graph: how skewed is it?
@@ -426,12 +257,12 @@ object Graph {
   // edge set means groupBy(dst) already covers every node, so a round
   // is ONE equijoin against the persisted (src, dst, deg) frame plus
   // one aggregation — state per round is the rank vector, never the
-  // corpus. Rounds run under iterateRounds' checkpoint-block hygiene.
+  // corpus. Rounds run on the fixed-rounds policy of the one loop.
   // Oracle: the same 10 rounds unrolled as chained DuckDB CTEs.
   private val prRounds = 10
 
   /** Power-iteration PageRank over a symmetric edge frame; returns
-    * (node, r, deg). Checkpointed rounds via iterateRounds, so the
+    * (node, r, deg). Checkpointed rounds via `iterate`, so the
     * result is self-contained once returned. Exposed for spec graphs. */
   def pagerank(edges: DataFrame, rounds: Int = prRounds): DataFrame = {
     val deg = edges.groupBy(col("src").as("n")).agg(count(lit(1)).as("deg"))
@@ -455,22 +286,18 @@ object Graph {
       // round that the planner picked because checkpointed state has
       // no size estimate (guide §2.4/§3.1). Above the cap: unchanged.
       val small = n <= bcastRowCap
-      val pr = iterateRounds(init, rounds) { prev =>
+      val pr = iterate(init, rounds, "pagerank", FixedRounds) { prev =>
         edeg.join(bcastIf(prev, small), col("src") === col("node"))
           .groupBy(col("dst"))
           .agg(sum(col("r") / col("deg")).as("c"))
           .select(col("dst").as("node"),
             (lit(0.15) / n + lit(0.85) * col("c")).as("r"))
-      }
+      }(_.count())
       // The deg join re-reads edeg (persisted) — materialize before the
-      // finally releases that cache. `out`'s own checkpoint blocks join
-      // `retired` and live until the chunk-boundary invalidate() (see
-      // the field comment: release-on-next-call raced parallel Verify).
-      val out = pr.join(deg, col("node") === col("n"))
+      // finally releases that cache.
+      retain(pr.join(deg, col("node") === col("n"))
         .select(col("node"), col("r"), col("deg"))
-        .localCheckpoint(eager = true)
-      synchronized { retired = retired ++ ckptRdds(out) }
-      out
+        .localCheckpoint(eager = true))
     } finally edeg.unpersist(blocking = false)
   }
 
@@ -527,7 +354,7 @@ object Graph {
   def shortestDistances(edges: DataFrame, seeds: DataFrame,
       opName: String): DataFrame = {
     val init = seeds.select(col("node")).withColumn("dist", lit(0L))
-    iterate(init, 50, opName) { dist =>
+    iterate(init, 50, opName, Converge) { dist =>
       val relaxed = edges.join(dist, edges("src") === dist("node"))
         .select(col("dst").as("node"), (col("dist") + 1).as("dist"))
       dist.unionByName(relaxed)
@@ -622,7 +449,7 @@ object Graph {
   // for k=2 is the cycle-bearing core of the near-dup graph, the part
   // where transitive duplicate clusters actually live (trees and
   // chains of borderline pairs peel away). Run as a FIXED 12-round
-  // peel on iterateRounds (checkpoint hygiene; peeling is monotone,
+  // peel on the one checkpointed loop (peeling is monotone,
   // so extra rounds past the fixpoint are no-ops and the oracle can
   // unroll the same 12 rounds as chained CTEs — the pagerank
   // precedent). Per round: one degree aggregate + two semi-join-
@@ -638,16 +465,16 @@ object Graph {
     try {
       // Round-17: the peel only ever REMOVES edges, so an unchanged
       // count means an unchanged set and every further round is the
-      // identity — iterateUpTo stops there instead of paying all 12
-      // fixed rounds' shuffles (the DuckDB twin's remaining unrolled
+      // identity — the early-stop policy stops there instead of paying
+      // all 12 fixed rounds' shuffles (the DuckDB twin's remaining unrolled
       // rounds are identities on the converged set, so outputs are
       // bit-identical). The qualifying-node set `ok` is |V|-bounded:
       // broadcast when the measured edge count (an upper bound on
       // |V| for this symmetric graph) fits, killing both per-round
       // join exchanges against the peeled edge state (guide §3.1).
       val small = edges0.count() <= bcastRowCap
-      val core = iterateUpTo(edges0.select(col("src"), col("dst")),
-        kcoreRounds, "graphKcore") { e =>
+      val core = iterate(edges0.select(col("src"), col("dst")),
+        kcoreRounds, "graphKcore", EarlyStop) { e =>
         val ok = e.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
           .filter(col("d") >= kcoreK).select(col("n"))
         e.join(bcastIf(ok.withColumnRenamed("n", "src"), small), Seq("src"))
@@ -1240,66 +1067,51 @@ object Graph {
   // Naive (f(v), b(v)) min-ancestor/min-descendant labeling is WRONG
   // (two parallel SCCs sharing an entry and an exit collide), so this
   // computes the exact transitive closure as a pair frame — reach ∪
-  // (reach ⋈ edges) to a Graph.iterate fixpoint — then
+  // (reach ⋈ edges) to an `iterate` fixpoint — then
   // scc_id(v) = min{u : v→*u ∧ u→*v} via one self-join of the closure
   // on the swapped pair. Scale note: the closure is quadratic in
   // NODES by design — this targets metadata-scale derived graphs
   // (event taxonomies, |V| = event types, closure ≤ |V|²) sitting on
   // a corpus-scale edge DERIVATION (the lag window + distinct do the
   // 100 TB work); corpus-node graphs route to graph_components.
-  /** Session-shared SCC labeling (node, scc_id, scc_size), keyed by
-    * (session, dir) — the Dedup-fixture discipline. Two queries
-    * consume it (graph_scc itself and graph_condense's quotient
-    * build); before this fixture each ran its OWN transitive-closure
-    * iterate — two corpus-scale closure builds per round, the round-13
-    * verdict's "weak #2". The scc frame is eagerly localCheckpoint'ed
-    * here so it stands on its own blocks: the closure's final-round
-    * blocks (in `retired`) stay live until invalidate() regardless,
-    * but the fixture must not silently depend on them. */
-  private var sccFixture: Option[((SparkSession, String), DataFrame,
-    Seq[RDD[_]])] = None
-
+  /** Session-shared SCC labeling (node, scc_id, scc_size): the
+    * `graph_scc_closure` fixture. Two queries consume it (graph_scc
+    * itself and graph_condense's quotient build); before this fixture
+    * each ran its OWN transitive-closure iterate — two corpus-scale
+    * closure builds per round, the round-13 verdict's "weak #2". The
+    * scc frame is eagerly localCheckpoint'ed so it stands on its own
+    * blocks: the closure's final-round blocks are retained until the
+    * chunk boundary regardless, but the fixture must not silently
+    * depend on them. */
   private def sccOf(spark: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val key = (spark, dir)
-      sccFixture match {
-        case Some((k, df, _)) if k == key => df
-        case prev =>
-          prev.foreach { case (_, _, rdds) =>
-            rdds.foreach(r => scala.util.Try(r.unpersist(blocking = false)))
-          }
-          val w = Window.partitionBy(col("user_id"))
-            .orderBy(col("ts"), col("event_id"))
-          val ev = graft.Tables(spark, dir).events
-          val edges = ev
-            .withColumn("f", lag(col("event_type"), 1).over(w))
-            .filter(col("f").isNotNull)
-            .select(col("f"), col("event_type").as("t")).distinct()
-          val nodes = ev.select(col("event_type").as("v")).distinct()
-          val init = nodes.select(col("v").as("src"), col("v").as("dst"))
-            .union(edges.select(col("f").as("src"), col("t").as("dst")))
-            .distinct()
-          val scc = graft.Families.timedFixture("graph_scc_closure") {
-            val closure = iterate(init, 50, "graph_scc") { reach =>
-              reach.union(
-                reach.join(edges, reach("dst") === edges("f"))
-                  .select(reach("src"), edges("t").as("dst")))
-                .distinct()
-            }(_.count())
-            val sccRaw = closure.as("r1")
-              .join(closure.as("r2"),
-                col("r1.src") === col("r2.dst") && col("r1.dst") === col("r2.src"))
-              .select(col("r1.src").as("node"), col("r1.dst").as("m"))
-              .groupBy(col("node")).agg(min(col("m")).as("scc_id"))
-            val sizes = sccRaw.groupBy(col("scc_id"))
-              .agg(count(lit(1)).as("scc_size"))
-            sccRaw.join(broadcast(sizes), Seq("scc_id"))
-              .select(col("node"), col("scc_id"), col("scc_size"))
-              .localCheckpoint(eager = true)
-          }
-          sccFixture = Some((key, scc, ckptRdds(scc)))
-          scc
-      }
+    Checkpoints.fixture("graph_scc_closure", spark, dir) {
+      val w = Window.partitionBy(col("user_id"))
+        .orderBy(col("ts"), col("event_id"))
+      val ev = graft.Tables(spark, dir).events
+      val edges = ev
+        .withColumn("f", lag(col("event_type"), 1).over(w))
+        .filter(col("f").isNotNull)
+        .select(col("f"), col("event_type").as("t")).distinct()
+      val nodes = ev.select(col("event_type").as("v")).distinct()
+      val init = nodes.select(col("v").as("src"), col("v").as("dst"))
+        .union(edges.select(col("f").as("src"), col("t").as("dst")))
+        .distinct()
+      val closure = iterate(init, 50, "graph_scc", Converge) { reach =>
+        reach.union(
+          reach.join(edges, reach("dst") === edges("f"))
+            .select(reach("src"), edges("t").as("dst")))
+          .distinct()
+      }(_.count())
+      val sccRaw = closure.as("r1")
+        .join(closure.as("r2"),
+          col("r1.src") === col("r2.dst") && col("r1.dst") === col("r2.src"))
+        .select(col("r1.src").as("node"), col("r1.dst").as("m"))
+        .groupBy(col("node")).agg(min(col("m")).as("scc_id"))
+      val sizes = sccRaw.groupBy(col("scc_id"))
+        .agg(count(lit(1)).as("scc_size"))
+      sccRaw.join(broadcast(sizes), Seq("scc_id"))
+        .select(col("node"), col("scc_id"), col("scc_size"))
+        .localCheckpoint(eager = true)
     }
 
   def graphScc(spark: SparkSession, dir: String): DataFrame =
@@ -1429,7 +1241,7 @@ object Graph {
   // node, keep distinct cross-SCC edges, and read the acyclic level
   // structure (level = longest path from any source SCC — the "how
   // deep into the flow is this behavior cluster" axis a funnel
-  // analysis wants). Levels by iterated relaxation to a Graph.iterate
+  // analysis wants). Levels by iterated relaxation to an `iterate`
   // fixpoint — level(v) ← max(level(v), level(pred)+1) — which
   // terminates because the condensation is a DAG by construction
   // (same closure-frame scale posture as graph_scc: quadratic in
@@ -1451,29 +1263,21 @@ object Graph {
       .join(scc.select(col("node").as("t"), col("scc_id").as("dst")), Seq("t"))
       .filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst")).distinct()
-    // longest-path relaxation on the ≤|V|-row quotient frame. NOT
-    // Graph.iterate: the scc fixture stands on its own eager
-    // checkpoint now, but at this frame size lineage growth over
-    // ≤|V| rounds is trivial — a plain bounded loop is the right tool.
-    var levels = scc.select(col("scc_id")).distinct()
+    // Longest-path relaxation on the ≤|V|-row quotient frame. Level
+    // sums only grow, so a repeated sum is a fixpoint; on a cyclic
+    // quotient they grow forever and the loop fails at its cap.
+    val init = scc.select(col("scc_id")).distinct()
       .withColumn("level", lit(0L))
-    var prevSum = -1L
-    var curSum = 0L
-    var rounds = 0
-    while (curSum != prevSum && rounds < 50) {
+    val levels = try iterate(init, 50, "graph_condense", Converge) { cur =>
       val relaxed = qEdges
-        .join(levels.select(col("scc_id").as("src"), col("level").as("plvl")),
+        .join(cur.select(col("scc_id").as("src"), col("level").as("plvl")),
           Seq("src"))
         .select(col("dst").as("scc_id"), (col("plvl") + 1).as("level"))
-      levels = levels.union(relaxed)
+      cur.union(relaxed)
         .groupBy(col("scc_id")).agg(max(col("level")).as("level"))
-      prevSum = curSum
-      curSum = levels.agg(coalesce(sum(col("level")), lit(0L)))
-        .collect()(0).getLong(0)
-      rounds += 1
-    }
-    require(curSum == prevSum,
-      "graph_condense: level relaxation did not converge (cyclic quotient?)")
+    }(_.agg(coalesce(sum(col("level")), lit(0L))).collect()(0).getLong(0))
+    catch { case e: IllegalArgumentException => throw new IllegalArgumentException(
+      "graph_condense: level relaxation did not converge (cyclic quotient?)", e) }
     val outDeg = qEdges.groupBy(col("src").as("scc_id"))
       .agg(count(lit(1)).as("out_degree"))
     scc.select(col("scc_id"), col("scc_size")).distinct()
@@ -1528,7 +1332,7 @@ object Graph {
   // ─── graph_closeness: out-closeness centrality, exact distances ───
   // Which behavior reaches the rest of the taxonomy fastest? Exact
   // single-source shortest-path distances on the directed transition
-  // graph via min-plus relaxation to a Graph.iterate fixpoint —
+  // graph via min-plus relaxation to an `iterate` fixpoint —
   // distance frame ≤ |V|² pairs (the graph_scc closure posture:
   // metadata-scale node set on a corpus-scale edge derivation), one
   // relaxation join + min-aggregate per round, per-round blocks
@@ -1554,7 +1358,7 @@ object Graph {
     val init = nodes.select(col("v").as("src"), col("v").as("dst"), lit(0L).as("d"))
       .union(edges.select(col("f").as("src"), col("t").as("dst"), lit(1L).as("d")))
       .groupBy(col("src"), col("dst")).agg(min(col("d")).as("d"))
-    val dist = iterate(init, 32, opName) { cur =>
+    val dist = iterate(init, 32, opName, Converge) { cur =>
       cur.union(
         cur.join(edges, cur("dst") === edges("f"))
           .select(cur("src"), edges("t").as("dst"), (cur("d") + 1L).as("d")))
@@ -1816,7 +1620,7 @@ object Graph {
   // degree-bounded per-node window (partitioned by the high-
   // cardinality node key) + an aggregate — never a global sort, and
   // state per round is the |V|-row score frame. Rounds run under
-  // iterateRounds' checkpoint-block hygiene; Round12OpsSpec asserts
+  // the one checkpointed loop; Round12OpsSpec asserts
   // one more round is a fixpoint (the convergence guarantee) and
   // pins a crafted triangle+pendant graph core-exact.
   private val corenessRounds = 10
@@ -1837,18 +1641,16 @@ object Graph {
       // the window exchange on src remains (it is the round's real
       // shuffle). All-integer state: order-insensitive.
       val small = deg.count() <= bcastRowCap
-      val fin = iterateUpTo(deg.select(col("node"), col("deg").as("c")),
-        rounds, "graphCoreness") { prev =>
+      val fin = iterate(deg.select(col("node"), col("deg").as("c")),
+        rounds, "graphCoreness", EarlyStop) { prev =>
         hIndexRound(edges, bcastIf(prev, small))
       } { df =>
         val r = df.agg(count(lit(1)), sum(col("c"))).head
         (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
       }
-      val out = fin.join(deg, Seq("node"))
+      retain(fin.join(deg, Seq("node"))
         .select(col("node"), col("c").as("coreness"), col("deg"))
-        .localCheckpoint(eager = true)
-      synchronized { retired = retired ++ ckptRdds(out) }
-      out
+        .localCheckpoint(eager = true))
     } finally deg.unpersist(blocking = false)
   }
 
@@ -1922,10 +1724,10 @@ object Graph {
     // nodes by round 4 — analysis alone hangs). Checkpointing rawA/a/
     // rawH/h keeps every round's plan constant-size; the frames are
     // |types|- and |users|-rowed, so the materializations are noise.
-    val temps = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    val temps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def ckpt(df: DataFrame): DataFrame = {
       val c = df.localCheckpoint(eager = true)
-      temps ++= ckptRdds(c)
+      temps += c
       c
     }
     try {
@@ -1976,16 +1778,14 @@ object Graph {
         .orderBy(col("score").desc, col("node")).limit(20)
       val auths = a
         .select(lit("auth").as("kind"), col("event_type").as("node"), col("score"))
-      // Eager checkpoint (the 8 join rounds would otherwise re-run per
-      // downstream action), registered under the same one-result-alive
-      // block discipline as pagerank's.
+      // Eager checkpoint: the 8 join rounds would otherwise re-run per
+      // downstream action.
       val out = hubs.unionByName(auths)
         .orderBy(col("kind"), col("score").desc, col("node"))
         .localCheckpoint(eager = true)
       // out is materialized: every per-round temp block is dead now.
-      temps.foreach(_.unpersist(blocking = false))
-      synchronized { retired = retired ++ ckptRdds(out) }
-      out
+      Checkpoints.release(temps.toSeq: _*)
+      retain(out)
     } finally edges.unpersist(blocking = false)
   }
 
@@ -2041,7 +1841,7 @@ object Graph {
   // bounded — the 100 TB-safe triangle shape), support per canonical
   // edge via a 3-way explode + one map-combining count, an equijoin
   // filter. State between rounds is the canonical edge list,
-  // localCheckpointed per round by iterateRounds' block hygiene.
+  // localCheckpointed per round by the one checkpointed loop.
   private val trussRounds = 3
 
   private[graft] def peelOnce(canon: DataFrame, minSup: Long,
@@ -2096,7 +1896,7 @@ object Graph {
       // count fits.
       val small = edges.count() <= bcastRowCap
       val perK = Seq(3L, 4L).map { k =>
-        val fin = iterateUpTo(canon0, trussRounds, s"graphKtruss k=$k")(
+        val fin = iterate(canon0, trussRounds, s"graphKtruss k=$k", EarlyStop)(
           peelOnce(_, k - 2, small))(_.count())
         val nE = fin.agg(count(lit(1)).as("n_edges"))
         val nN = fin.select(col("a").as("nd"))
@@ -2104,10 +1904,8 @@ object Graph {
           .agg(count(lit(1)).as("n_nodes"))
         nE.crossJoin(nN).select(lit(k).as("k"), col("n_edges"), col("n_nodes"))
       }
-      val out = perK.reduce(_ unionByName _).orderBy(col("k"))
-        .localCheckpoint(eager = true)
-      synchronized { retired = retired ++ ckptRdds(out) }
-      out
+      retain(perK.reduce(_ unionByName _).orderBy(col("k"))
+        .localCheckpoint(eager = true))
     } finally edges.unpersist(blocking = false)
   }
 

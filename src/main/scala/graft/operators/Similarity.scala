@@ -111,32 +111,9 @@ object Similarity {
   }
 
   /** Corpus size per (session, dir) — one stats-only parquet count,
-    * memoized so repeated plan builds don't re-run the job. Cleared by
-    * Families.invalidateFixtures (via invalidate() below): an unpruned
-    * map would keep every retired chunk's stopped SparkSession strongly
-    * referenced across Bench/Verify session recycling, and would serve
-    * a stale count if a dataset is regenerated under the same dir
-    * within one live session. */
-  private val nVecsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]
+    * memoized so repeated plan builds don't re-run the job. */
   private[operators] def nVecs(spark: SparkSession, dir: String): Long =
-    nVecsCache.computeIfAbsent((spark, dir),
-      _ => graft.Tables(spark, dir).embeddings.count())
-
-  /** Chunk-boundary reset (same contract as Dedup/Trike/Graph
-    * .invalidate): the memo only exists to dedupe plan-build counts
-    * within one session's chunk, so a full clear is correct and keeps
-    * no reference to any stopped context. The knn_seed fixture's
-    * checkpoint blocks are released the same try-wrapped way as
-    * Dedup's (the owning session may already be stopped). */
-  def invalidate(): Unit = synchronized {
-    nVecsCache.clear()
-    ivfModelCache.clear()
-    knnFixture.foreach { case (_, _, _, rdds) =>
-      rdds.foreach(r => scala.util.Try(r.unpersist(blocking = false)))
-    }
-    knnFixture = None
-  }
+    Checkpoints.memo("n_vecs", spark, dir)(graft.Tables(spark, dir).embeddings.count())
 
   /** (vec_id, table, bucket) for every vector: bucket = the sign bits
     * of this table's hyperplane projections packed into an int. Only
@@ -344,19 +321,16 @@ object Similarity {
 
   /** Driver-collected coarse-quantizer model: (cell ids, flattened
     * centroid matrix). Bounded O(√n) by construction (ivfCents is a
-    * TakeOrdered sample); cached per (session, dir) so the whole IVF
-    * family shares ONE model-build job per chunk. Cleared by
-    * invalidate(). */
-  private val ivfModelCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Array[Long], Array[Double])]
+    * TakeOrdered sample); memoized per (session, dir) so the whole IVF
+    * family shares ONE model-build job per chunk. */
   private def ivfModelArrays(spark: SparkSession,
       dir: String): (Array[Long], Array[Double]) =
-    ivfModelCache.computeIfAbsent((spark, dir), _ => {
+    Checkpoints.memo("ivf_model", spark, dir) {
       val rows = ivfCents(spark, dir).collect()
       val cells = rows.map(_.getLong(0))
       val mat = rows.flatMap(_.getSeq[Double](1)).toArray
       (cells, mat)
-    })
+    }
 
   /** Top-`keep` cells of `vcol` in (d2, cell) rank order — the
     * graft_nearest_cells projection over the plan-literal model (task
@@ -965,18 +939,14 @@ object Similarity {
   // full cell self-join + two ranking windows inside every invocation
   // — 35 s at sf0.1 for what is milliseconds of candidate math. Same
   // discipline as Dedup's signature/pair-graph fixtures: built once
-  // per (session, dir), localCheckpoint + count under a timedFixture
-  // ledger entry (Bench prices the build as its own "knn_seed" line
-  // item, never charging it to whichever consumer runs first),
-  // released by invalidate() at chunk boundaries.
+  // per (session, dir) by `Checkpoints.fixture` (Bench prices the
+  // build as its own "knn_seed" line item, never charging it to
+  // whichever consumer runs first).
   //   knnEdges: (vec_id, rank, neighbor_id, cell, cos_bp) — knn_join's
   //     exact output, |V|·k rows.
   //   seedEdges: (vec_id, neighbor_id) — knnEdges ∪ one BRIDGE edge
   //     per node (its nearest neighbor inside its 2nd-nearest cell):
   //     the connected NN-Descent seed (see annNndescent).
-  private var knnFixture: Option[((SparkSession, String), DataFrame, DataFrame,
-      Seq[org.apache.spark.rdd.RDD[_]])] = None
-
   /** The UNCHECKPOINTED (knnEdges, bridge) plans — the fixture's
     * builder, exposed to PlanShapeSpec so the cell-equijoin shape
     * stays auditable after the fixture hides it behind a LogicalRDD. */
@@ -1023,27 +993,14 @@ object Similarity {
   }
 
   private def knnSeed(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    synchronized {
-      val key = (spark, dir)
-      knnFixture match {
-        case Some((k, e, s, _)) if k == key => (e, s)
-        case prev =>
-          prev.foreach { case (_, _, _, rdds) =>
-            rdds.foreach(r => scala.util.Try(r.unpersist(blocking = false)))
-          }
-          val (edges, seed) = graft.Families.timedFixture("knn_seed") {
-            val (ePlan, bridge) = knnSeedPlans(spark, dir)
-            val e = ePlan.localCheckpoint(eager = false)
-            e.count()
-            val s = e.select(col("vec_id"), col("neighbor_id")).union(bridge)
-              .localCheckpoint(eager = false)
-            s.count()
-            (e, s)
-          }
-          knnFixture = Some((key, edges, seed,
-            Graph.ckptRdds(edges) ++ Graph.ckptRdds(seed)))
-          (edges, seed)
-      }
+    Checkpoints.fixture("knn_seed", spark, dir) {
+      val (ePlan, bridge) = knnSeedPlans(spark, dir)
+      val e = ePlan.localCheckpoint(eager = false)
+      e.count()
+      val s = e.select(col("vec_id"), col("neighbor_id")).union(bridge)
+        .localCheckpoint(eager = false)
+      s.count()
+      (e, s)
     }
 
   def knnJoin(spark: SparkSession, dir: String): DataFrame =
@@ -1309,7 +1266,7 @@ object Similarity {
     // count + anti-join count + semi-join count).
     def ckptLazy(df: DataFrame): DataFrame = {
       val c = df.localCheckpoint(eager = false)
-      ckpts ++= Graph.ckptRdds(c)
+      ckpts ++= Checkpoints.ckptRdds(c)
       c
     }
     try {
@@ -2191,7 +2148,7 @@ object Similarity {
     var state = v.crossJoin(broadcast(seed.select(col("cv"))))
       .withColumn("d", dist2(col("v"), col("cv"))).drop("cv")
       .localCheckpoint(eager = false)
-    var stateRdds = Graph.ckptRdds(state)
+    var stateRdds = Checkpoints.ckptRdds(state)
     var prevRdds: Seq[org.apache.spark.rdd.RDD[_]] = Nil
     for (t <- 1 until kcenterK) {
       val nxt = state.orderBy(col("d").desc, col("vec_id")).limit(1)
@@ -2209,7 +2166,7 @@ object Similarity {
         .withColumn("d", least(col("d"), dist2(col("v"), col("cv"))))
         .drop("cv")
         .localCheckpoint(eager = false)
-      stateRdds = Graph.ckptRdds(state)
+      stateRdds = Checkpoints.ckptRdds(state)
     }
     // The last two state generations were never (or just) materialized
     // and picks does not reference them — drop the block references.

@@ -88,50 +88,19 @@ object Trike {
         posexplode(col("f")).as(Seq("pos", "message")))
       .withColumn("pos", col("pos").cast("long"))
 
-  /** Session-shared fixture: all seven trike queries branch off the
-    * same packets→frames prefix, which round 4 measured at ~0.7-1.3s
-    * of redundant recompute PER QUERY. At 100 TB the framed message
-    * stream is the ingestion pipeline's materialization point — a
-    * persisted table every downstream analytic reads, never recomputed
+  /** Session-shared fixture (`trike_frames`): all seven trike queries
+    * branch off the same packets→frames prefix, which round 4 measured
+    * at ~0.7-1.3s of redundant recompute PER QUERY. At 100 TB the framed
+    * message stream is the ingestion pipeline's materialization point —
+    * a persisted table every downstream analytic reads, never recomputed
     * per query — so the batch twins share one materialization per
-    * (session, dir) too. localCheckpoint rather than cache: a durable
-    * materialization with explicit release (the predecessor's blocks
-    * are dropped when the key changes), not an advisory cache entry.
-    * Same sequential-execution assumption as Dedup's signature cache:
-    * a dir switch invalidates frames the previous dir's queries
-    * returned but haven't yet executed. */
-  private var fixture: Option[((SparkSession, String), DataFrame,
-    Seq[org.apache.spark.rdd.RDD[_]])] = None
-
-  /** Drop the shared frames fixture and release its checkpoint blocks —
-    * for callers that stop the owning session (Bench's chunk recycle).
-    * Safe to call when nothing is cached. */
-  def invalidate(): Unit = synchronized {
-    fixture.foreach { case (_, _, rdds) =>
-      rdds.foreach(r => scala.util.Try(r.unpersist(blocking = false)))
+    * (session, dir) too (`Checkpoints.fixture`). */
+  private def frames(spark: SparkSession, dir: String): DataFrame =
+    Checkpoints.fixture("trike_frames", spark, dir) {
+      val f = framesPlan(spark, dir).localCheckpoint(eager = false)
+      f.count()
+      f
     }
-    fixture = None
-  }
-
-  private def frames(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = (spark, dir)
-    fixture match {
-      case Some((k, df, _)) if k == key => df
-      case prev =>
-        prev.foreach { case (_, _, rdds) =>
-          rdds.foreach(r => scala.util.Try(r.unpersist(blocking = false)))
-        }
-        // Eagerly materialized under a timed-fixture ledger entry so
-        // Bench reports the build as its own line item (Families doc).
-        val df = graft.Families.timedFixture("trike_frames") {
-          val f = framesPlan(spark, dir).localCheckpoint(eager = false)
-          f.count()
-          f
-        }
-        fixture = Some((key, df, Graph.ckptRdds(df)))
-        df
-    }
-  }
 
   private val framesSql: String =
     s"""$packetsSql,

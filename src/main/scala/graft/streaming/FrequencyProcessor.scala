@@ -25,14 +25,44 @@ final case class FreqCount(group: String, member: Long, n: Long)
   * Emits the refreshed count for every (group, member) touched by the
   * trigger (Update-mode sink keeps the latest row per pair).
   */
-class FrequencyProcessor(ttl: java.time.Duration)
-    extends StatefulProcessor[String, (String, Long), FreqCount] {
+class FrequencyProcessor(protected val ttl: java.time.Duration)
+    extends StatefulProcessor[String, (String, Long), FreqCount] with FrequencyCounting
+
+/** The batch→stream migration shape: identical counting logic, but
+  * state is SEEDED from a batch-computed snapshot before the first
+  * micro-batch (StatefulProcessorWithInitialState). This is how a
+  * pipeline cuts over from nightly batch aggregation to streaming
+  * without losing history — the snapshot is the last batch output,
+  * the stream continues from it, and no reprocessing of the
+  * historical log ever happens. handleInitialState runs once per
+  * seed row, before any input. */
+class SeededFrequencyProcessor(protected val ttl: java.time.Duration)
+    extends StatefulProcessorWithInitialState[String, (String, Long), FreqCount, FreqCount]
+    with FrequencyCounting {
+
+  override def handleInitialState(key: String, row: FreqCount,
+      tv: TimerValues): Unit =
+    add(row.member, row.n)
+}
+
+/** The counting body both processors share: the TTL'd MapState and the
+  * per-trigger update. */
+trait FrequencyCounting extends StatefulProcessor[String, (String, Long), FreqCount] {
+
+  protected def ttl: java.time.Duration
 
   @transient private var counts: MapState[Long, Long] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
     counts = getHandle.getMapState[Long, Long]("counts",
       Encoders.scalaLong, Encoders.scalaLong, TTLConfig(ttl))
+
+  /** Add `d` to `member`'s count; returns the new count. */
+  protected def add(member: Long, d: Long): Long = {
+    val n = (if (counts.containsKey(member)) counts.getValue(member) else 0L) + d
+    counts.updateValue(member, n)
+    n
+  }
 
   override def handleInputRows(key: String, rows: Iterator[(String, Long)],
       tv: TimerValues): Iterator[FreqCount] = {
@@ -43,55 +73,22 @@ class FrequencyProcessor(ttl: java.time.Duration)
     }
     // Eager: the state writes must happen inside this call, not when
     // the engine later drains the returned iterator.
-    val out = delta.map { case (member, d) =>
-      val n = (if (counts.containsKey(member)) counts.getValue(member) else 0L) + d
-      counts.updateValue(member, n)
-      FreqCount(key, member, n)
-    }.toVector
-    out.iterator
-  }
-}
-
-/** The batch→stream migration shape: identical counting logic, but
-  * state is SEEDED from a batch-computed snapshot before the first
-  * micro-batch (StatefulProcessorWithInitialState). This is how a
-  * pipeline cuts over from nightly batch aggregation to streaming
-  * without losing history — the snapshot is the last batch output,
-  * the stream continues from it, and no reprocessing of the
-  * historical log ever happens. handleInitialState runs once per
-  * seed row, before any input. */
-class SeededFrequencyProcessor(ttl: java.time.Duration)
-    extends StatefulProcessorWithInitialState[String, (String, Long), FreqCount, FreqCount] {
-
-  @transient private var counts: MapState[Long, Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    counts = getHandle.getMapState[Long, Long]("counts",
-      Encoders.scalaLong, Encoders.scalaLong, TTLConfig(ttl))
-
-  override def handleInitialState(key: String, row: FreqCount,
-      tv: TimerValues): Unit =
-    counts.updateValue(row.member,
-      (if (counts.containsKey(row.member)) counts.getValue(row.member) else 0L)
-        + row.n)
-
-  override def handleInputRows(key: String, rows: Iterator[(String, Long)],
-      tv: TimerValues): Iterator[FreqCount] = {
-    val delta = rows.foldLeft(Map.empty[Long, Long]) { case (m, (_, member)) =>
-      m.updated(member, m.getOrElse(member, 0L) + 1L)
-    }
-    val out = delta.map { case (member, d) =>
-      val n = (if (counts.containsKey(member)) counts.getValue(member) else 0L) + d
-      counts.updateValue(member, n)
-      FreqCount(key, member, n)
-    }.toVector
-    out.iterator
+    delta.map { case (member, d) => FreqCount(key, member, add(member, d)) }
+      .toVector.iterator
   }
 }
 
 object FrequencyProcessor {
 
-  /** (group, member) pairs → running per-pair counts, Update mode. */
+  /** (group, member) pairs → running per-pair counts, Update mode.
+    *
+    * The TTL runs on processing time, so under `Trigger.AvailableNow`
+    * the engine keeps scheduling no-data batches to evict expired state
+    * and the query does not terminate. An AvailableNow run (a backfill)
+    * over this operator must set
+    * `spark.sql.streaming.noDataMicroBatches.enabled=false`; TTL eviction
+    * then happens in data batches only. The same holds for
+    * `countsSeeded`. */
   def counts(pairs: Dataset[(String, Long)],
       ttl: java.time.Duration = java.time.Duration.ofHours(24)): Dataset[FreqCount] = {
     import pairs.sparkSession.implicits._
@@ -103,7 +100,8 @@ object FrequencyProcessor {
 
   /** Same, with state seeded from a batch snapshot (the cutover
     * shape): `seed` is the last batch aggregate, read once into state
-    * before the first trigger. */
+    * before the first trigger. Like `counts`, an AvailableNow run ends
+    * only with `spark.sql.streaming.noDataMicroBatches.enabled=false`. */
   def countsSeeded(pairs: Dataset[(String, Long)], seed: Dataset[FreqCount],
       ttl: java.time.Duration = java.time.Duration.ofHours(24)): Dataset[FreqCount] = {
     import pairs.sparkSession.implicits._

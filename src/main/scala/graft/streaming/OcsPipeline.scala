@@ -49,16 +49,9 @@ object OcsPipeline {
     * oracle SQL host-dependent, so the batch/oracle value comes from
     * SPARK_GRAFT_EVENT_SOURCE with a fixed default. A production
     * streaming deployment that wants hostname fidelity sets the env
-    * var to `hostEventSource`. */
+    * var to the host's name, e.g. `$(hostname).mbta.com/trike`. */
   val eventSource: String =
     sys.env.getOrElse("SPARK_GRAFT_EVENT_SOURCE", "graft.mbta.com/trike")
-
-  /** The reference-faithful hostname-interpolated source string, for
-    * streaming deployments (cloud_event.ex:24). Not used in batch
-    * queries — see `eventSource`. */
-  def hostEventSource: String =
-    scala.util.Try(java.net.InetAddress.getLocalHost.getHostName)
-      .toOption.filter(_.nonEmpty).getOrElse("graft") + ".mbta.com/trike"
 
   /** packets(connId, sourceIp, receiveTs, payload) → one row per
     * complete frame, partial tail dropped. */
