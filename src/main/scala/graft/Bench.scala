@@ -155,8 +155,8 @@ object Bench {
       .mkString("[", ",", "]")
     val headlineLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$hq,"sf":"$sfDir","n_queries":${results.size},"n_failed":${failed.size},"failed":$fshort,"mode":"warm","iters":$Iters,"fixture_sec":${run.fixtures.map(_._2).sum},"heap_mb":$heapMb,"git":"$gitSha","full":"BENCH_FULL.json"}"""
 
-    // SELF-CHECK (the round-13 ask: BENCH_r11/r12 came back
-    // `parsed: null` and nobody noticed until the judge did). Recreate
+    // SELF-CHECK (a headline that parsed as `null` once went
+    // unnoticed for two runs). Recreate
     // the driver's parse exactly — take the LAST 2000 chars of what we
     // print, find the JSON line, parse it with Jackson (on Spark's
     // classpath) — and fail LOUDLY here if that would fail there. Also

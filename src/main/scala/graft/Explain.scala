@@ -7,14 +7,13 @@ import java.nio.file.{Files, Paths}
   *   runMain graft.Explain <sfDir> <outDir> <suffix> <k1,k2,…|all>
   *
   * Writes <outDir>/<key>_<suffix>.txt per key, planned on the Families
-  * harness — the session Bench times and Verify checks. The optimization
-  * rounds commit these as plans/rNN/<key>_before.txt / _after.txt so plan
-  * claims (Exchange counts, join strategies, PushedFilters) are
-  * auditable without running Spark. Note: queries that materialize
-  * eagerly while BUILDING their frame (the iterative graph ops, which
-  * return a localCheckpoint) show the checkpoint scan here; their
-  * interesting plan is the per-round step, documented separately where
-  * a claim depends on it.
+  * harness — the session Bench times and Verify checks. A before/after
+  * pair of these dumps makes plan claims (Exchange counts, join
+  * strategies, PushedFilters) auditable without running Spark. Note:
+  * queries that materialize eagerly while BUILDING their frame (the
+  * iterative graph ops, which return a localCheckpoint) show the
+  * checkpoint scan here; their interesting plan is the per-round step,
+  * documented separately where a claim depends on it.
   */
 object Explain {
   def main(args: Array[String]): Unit = {

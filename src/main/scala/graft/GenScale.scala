@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Dev-only data scale-up: replicate an existing testdata SF dir ×k
   * with deterministic, referential-integrity-preserving key shifts —
-  * the tool behind the round-14 sf1 scaling run (VERDICT r13 task 1:
-  * "turn the 100× posture from argued into observed").
+  * the tool behind the sf1 scaling run, which turns the 100× posture
+  * from argued into observed.
   *
   * NOT a new generator: the driver's synthetic distributions are the
   * contract (TESTDATA.md, seed=42, read-only), so sf1 is built FROM

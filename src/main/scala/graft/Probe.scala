@@ -30,19 +30,32 @@ object Probe {
         final case class StageAgg(var wall: Long = 0L, var tasks: Int = 0,
           var shufRead: Long = 0L, var shufWrite: Long = 0L, var input: Long = 0L,
           var name: String = "")
+        // Listener events arrive on the listener bus after the action
+        // that caused them returns, so each timed run tags its jobs
+        // with a job group and the tally counts by tag, not by when an
+        // event happens to be delivered. State below is guarded by
+        // `listener`'s monitor (the bus thread writes it).
+        val prefix = s"graft-probe-$key-"
+        val sentinel = s"graft-probe-drain-$key"
         val stages = mutable.Map.empty[Int, StageAgg]
+        val tagged = mutable.Set.empty[Int] // stage ids of timed jobs
         val jobs = mutable.ArrayBuffer.empty[(Int, Long)] // (jobId, wallMs)
-        val jobStart = mutable.Map.empty[Int, Long]
-        var listening = false
+        val pending = mutable.Map.empty[Int, Long] // jobId -> start time
+        var sentinelJob = -1
+        var sentinelDone = false
         val listener = new SparkListener {
-          override def onJobStart(e: SparkListenerJobStart): Unit =
-            if (listening) jobStart(e.jobId) = e.time
-          override def onJobEnd(e: SparkListenerJobEnd): Unit =
-            if (listening) jobStart.remove(e.jobId).foreach(t0 =>
-              jobs += ((e.jobId, e.time - t0)))
-          override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-            if (listening) {
-              val si = e.stageInfo
+          override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+            val group = Option(e.properties).fold("")(_.getProperty("spark.jobGroup.id", ""))
+            if (group == sentinel) sentinelJob = e.jobId
+            else if (group.startsWith(prefix)) { pending(e.jobId) = e.time; tagged ++= e.stageIds }
+          }
+          override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+            if (e.jobId == sentinelJob) sentinelDone = true
+            pending.remove(e.jobId).foreach(t0 => jobs += ((e.jobId, e.time - t0)))
+          }
+          override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+            val si = e.stageInfo
+            if (tagged(si.stageId)) {
               val a = stages.getOrElseUpdate(si.stageId, StageAgg())
               a.wall += si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)
               a.tasks += si.numTasks
@@ -51,23 +64,34 @@ object Probe {
               a.input += si.taskMetrics.inputMetrics.bytesRead
               a.name = si.name.take(80)
             }
+          }
         }
-        spark.sparkContext.addSparkListener(listener)
+        val sc = spark.sparkContext
+        sc.addSparkListener(listener)
 
-        val walls = (1 to iters).map { _ =>
+        val walls = (1 to iters).map { i =>
           spark.catalog.clearCache()
-          listening = true
+          sc.setJobGroup(s"$prefix$i", s"probe $key run $i")
           val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val w = (System.nanoTime() - t0) / 1e9
-          listening = false
-          w
+          try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          finally sc.clearJobGroup()
+          (System.nanoTime() - t0) / 1e9
         }
-        spark.sparkContext.removeSparkListener(listener)
+        // The bus delivers events in order, so once a job submitted
+        // after the timed runs has ended on the bus, every timed job's
+        // start has been delivered; then wait for their ends.
+        sc.setJobGroup(sentinel, "probe drain")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        val deadline = System.nanoTime() + 60L * 1000000000L
+        def drained = listener.synchronized(sentinelDone && pending.isEmpty)
+        while (!drained && System.nanoTime() < deadline) Thread.sleep(10)
+        sc.removeSparkListener(listener)
+        require(drained, s"probe: timed jobs still undelivered after 60 s: " +
+          listener.synchronized(pending.keys.toSeq.sorted))
 
         println(f"[probe] $key walls=${walls.map(w => f"$w%.2f").mkString(",")} " +
           f"median=${walls.sorted.apply(walls.size / 2)}%.2f over $iters iters")
-        println(f"[probe] jobs=${jobs.size} (${jobs.size / iters} per run) " +
+        println(f"[probe] jobs=${jobs.size} (${jobs.size.toDouble / iters}%.2f per run) " +
           f"jobWallSum=${jobs.map(_._2).sum / 1e3}%.2f s")
         val top = stages.toSeq.sortBy(-_._2.wall).take(25)
         println("[probe] top stages (summed over timed runs):")

@@ -20,8 +20,8 @@ final case class Tables(spark: SparkSession, dir: String) {
     *  - TIMESTAMP(MICROS) with tz: already TimestampType, no-op.
     *
     * A raw INT64 column is disambiguated by MAGNITUDE, not assumed to
-    * be nanos (the r11 ADVICE hazard: an unannotated-micros file
-    * silently divided by 1000): epoch seconds (~2·10⁹), millis
+    * be nanos (the hazard: an unannotated-micros file silently
+    * divided by 1000): epoch seconds (~2·10⁹), millis
     * (~2·10¹²), micros (~2·10¹⁵) and nanos (~2·10¹⁸) occupy disjoint
     * decades for any instant between 1973 and 5138, so one codegen'd
     * per-row comparison picks the right unit for every physical

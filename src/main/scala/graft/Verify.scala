@@ -8,9 +8,8 @@ import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
   *
   *   runMain graft.Verify <sfDir> <outDir> [k1,k2,…]
   *
-  * HARDENED FOR A 260+ QUERY REGISTRY (the round-12 lesson:
-  * CORRECTNESS_r12.json came back `{}` — the driver's run died mid-way
-  * and the round's entire correctness evidence vanished):
+  * HARDENED FOR A 260+ QUERY REGISTRY (a run that died mid-way once
+  * came back `{}`, and all of its correctness evidence vanished):
   *
   *  1. oracle_sql.json is written FIRST, before any query runs. If the
   *     run is killed at minute N, every parquet dumped before the kill

@@ -10,15 +10,12 @@ import org.apache.spark.sql.functions._
   *
   * Pure codegen'd built-ins (sha1 → hex, unhex → bytes, base64), so it
   * runs inside WholeStageCodegen at scan speed. The batch oracle
-  * queries use a sha256 twin instead (DuckDB has no sha1); this is the
-  * faithful variant, pinned by CloudEventIdSpec against
-  * java.security.MessageDigest.
+  * queries hash with sha256 inline instead (DuckDB has no sha1,
+  * `Trike.scala`); this is the faithful variant, pinned by
+  * CloudEventIdSpec against java.security.MessageDigest.
   */
 object CloudEventId {
 
   def sha1Base64(timeIso: Column, message: Column): Column =
     base64(unhex(sha1(concat(timeIso, message))))
-
-  def sha256Base64(timeIso: Column, message: Column): Column =
-    base64(unhex(sha2(concat(timeIso, message), 256)))
 }

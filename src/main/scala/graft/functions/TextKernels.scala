@@ -313,7 +313,7 @@ object WinnowMins {
     val posMask = scale - 1
     val lastP = math.max(0, n - winW)
     val seen = new java.util.LinkedHashSet[java.lang.Long]()
-    // Monotonic-deque sliding minimum (ADVICE r17): O(n) for any
+    // Monotonic-deque sliding minimum: O(n) for any
     // window width instead of the O(n·winW) per-position rescan —
     // same keys, same window extents, same insertion order into
     // `seen`, so the selected set is bit-identical.
@@ -472,7 +472,7 @@ object BpeTokenCount {
       // or a pair string with fewer than 2 codepoints can never match
       // an adjacent (a, b) run — the old replace-chain degraded such
       // entries to a no-op merge; skip them instead of throwing
-      // (ADVICE r17: the registered SQL function is reachable with
+      // (the registered SQL function is reachable with
       // arbitrary arrays, not just textBpePairs' 2-codepoint mines).
       val pu = pairs.getUTF8String(j)
       if (pu != null) {

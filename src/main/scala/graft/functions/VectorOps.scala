@@ -44,7 +44,4 @@ object VectorOps {
        |    list_transform(list_zip($x, $y),
        |      z -> (CAST(z[1] AS DOUBLE) - z[2]) * (CAST(z[1] AS DOUBLE) - z[2]))),
        |    (s, x) -> s + x)""".stripMargin
-
-  /** Back-compat alias for a self-join aliased `a`/`b`. */
-  val dotSql: String = dotSqlOf("a.v", "b.v")
 }

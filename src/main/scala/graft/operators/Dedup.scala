@@ -577,7 +577,7 @@ object Dedup {
     * checkpointed cand twice (harmless now, but the single-pass shape
     * also holds where cand is a live plan). Callers iterating over
     * the edges should persist the frame. */
-  private[operators] def pairEdges(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def pairEdges(spark: SparkSession, dir: String): DataFrame = {
     val (_, cand) = minhashSigsAndCand(spark, dir)
     cand.select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),

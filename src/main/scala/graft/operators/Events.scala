@@ -218,7 +218,7 @@ object Events {
   // The same 30-minute-gap semantics as ev_sessionize but via the
   // built-in session_window aggregate — the operator a Spark-first
   // user reaches for, and the one that carries over unchanged to
-  // Structured Streaming (StreamRelationalSpec drives it on a
+  // Structured Streaming (StreamingOcsSpec drives it on a
   // stream with a watermark). Native semantics are µs-precise: a
   // session extends while ts < session_end (= last ts + gap), so the
   // DuckDB twin flags a new session at gap ≥ 1800s in epoch_us —
@@ -1834,7 +1834,7 @@ object Events {
   // aggregate over the log; each quintile is then an exact global
   // rank from Ranks.groupedRank (bucket-ledger decomposition — users
   // grow linearly with data, so the old single-partition ntile
-  // windows were the r8 VERDICT's "weak" class) fed through
+  // windows were the "weak" class) fed through
   // ntileFromRank, fully tie-broken by user_id (ntile ties are
   // placement-nondeterministic otherwise). All three rank ascending,
   // so quintile 5 always means "best" (most recent / most visits /
@@ -2027,7 +2027,7 @@ object Events {
   // one lag pass over a (type)-keyed window; the percentiles are
   // EXACT ranks off Ranks.groupedRank's bucket ledger (16 s-wide
   // buckets via shiftright(gap, 4)), never a per-type full-sort
-  // window — the r11-VERDICT discipline for order statistics on
+  // window — the discipline for order statistics on
   // data-sized frames. k = ⌈q·n⌉; value-at-rank is tie-order
   // independent.
   def evGapQuantiles(spark: SparkSession, dir: String): DataFrame = {

@@ -1258,17 +1258,23 @@ object Graph {
     // Shared fixture — ONE closure build serves graph_scc + condense.
     val scc = sccOf(spark, dir)
       .select(col("node"), col("scc_id"), col("scc_size"))
-    val qEdges = edges
+    // Materialized once: every relaxation round and the out-degree
+    // read it, and unmaterialized it re-ran the lag window per round.
+    val qEdges = retain(edges
       .join(scc.select(col("node").as("f"), col("scc_id").as("src")), Seq("f"))
       .join(scc.select(col("node").as("t"), col("scc_id").as("dst")), Seq("t"))
       .filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst")).distinct()
+      .localCheckpoint(eager = true))
     // Longest-path relaxation on the ≤|V|-row quotient frame. Level
     // sums only grow, so a repeated sum is a fixpoint; on a cyclic
-    // quotient they grow forever and the loop fails at its cap.
-    val init = scc.select(col("scc_id")).distinct()
-      .withColumn("level", lit(0L))
-    val levels = try iterate(init, 50, "graph_condense", Converge) { cur =>
+    // quotient they grow forever and the loop fails at its cap. With
+    // no quotient edges every level is 0 and no round can change that.
+    // `init` is an aggregate so that its `level` is nullable, as the
+    // loop's output is: both paths write the same schema.
+    val init = scc.groupBy(col("scc_id")).agg(max(lit(0L)).as("level"))
+    val levels = if (qEdges.isEmpty) init
+    else try iterate(init, 50, "graph_condense", Converge) { cur =>
       val relaxed = qEdges
         .join(cur.select(col("scc_id").as("src"), col("level").as("plvl")),
           Seq("src"))
@@ -1670,11 +1676,6 @@ object Graph {
   def graphCoreness(spark: SparkSession, dir: String): DataFrame =
     coreness(Dedup.pairEdges(spark, dir)).orderBy(col("node"))
 
-  /** Spec access to the near-dup pair graph (pairEdges is
-    * operators-private). */
-  private[graft] def dupEdges(spark: SparkSession, dir: String): DataFrame =
-    Dedup.pairEdges(spark, dir)
-
   val graphCorenessSql: String = {
     val round = (i: Int) =>
       s"""c$i AS MATERIALIZED (
@@ -1876,12 +1877,6 @@ object Graph {
       .filter(col("sup") >= minSup)
       .select(col("a"), col("b"))
   }
-
-  /** Canonical (a<b) pair-graph edges — the truss peel's round-0
-    * state; exposed for the spec's fixpoint probe. */
-  private[graft] def trussCanon0(spark: SparkSession, dir: String): DataFrame =
-    Dedup.pairEdges(spark, dir).filter(col("src") < col("dst"))
-      .select(col("src").as("a"), col("dst").as("b"))
 
   def graphKtruss(spark: SparkSession, dir: String): DataFrame = {
     val edges = Dedup.pairEdges(spark, dir)

@@ -448,8 +448,8 @@ object RelationalExt {
   // row_number(), so percent_rank = (rank−1)/(n−1) and cume_dist =
   // rank/n of the EXACT per-segment rank — computed via Ranks
   // .groupedRank's bucket ledger instead of a 5-partition window (5
-  // segments = 5 tasks carrying all customers, the r8 VERDICT's skew
-  // watch item): one hash shuffle on (segment, bal_cents>>12), the
+  // segments = 5 tasks carrying all customers, a skew watch item):
+  // one hash shuffle on (segment, bal_cents>>12), the
   // cross-bucket carry rides the bounded ledger. Identical operands,
   // identical IEEE results, hash unchanged.
   def q34PercentRank(spark: SparkSession, dir: String): DataFrame = {
@@ -557,8 +557,8 @@ object RelationalExt {
   // global rank from Ranks.groupedRank (bucket ledger on the negated
   // spend >>12 — descending order becomes ascending on the negation,
   // arithmetic shiftright keeps negatives monotone) fed through
-  // ntileFromRank — no single-partition ntile window (the r8
-  // VERDICT's "weak" class). The lift windows still run on the
+  // ntileFromRank — no single-partition ntile window (the "weak"
+  // class). The lift windows still run on the
   // 10-row decile frame; integer-exact bp via the grand-total
   // broadcast.
   def q36DecileLift(spark: SparkSession, dir: String): DataFrame = {

@@ -259,7 +259,7 @@ object TextAnalysis {
     // untouched, so redacted_md5 is bit-identical. The intermediates
     // are each referenced more than once and regexp_replace is not
     // "cheap", so CollapseProject keeps them single-evaluation
-    // (verified in plans/r18: 3 regexp_replace, 1 regexp_count).
+    // (the physical plan shows 3 regexp_replace, 1 regexp_count).
     Tables(spark, dir).parallelized("documents")
       .select(col("doc_id"), planted.as("raw"))
       .withColumn("c", regexp_replace(col("raw"), cardRe, "[CARD]"))

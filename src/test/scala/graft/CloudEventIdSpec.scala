@@ -27,14 +27,4 @@ class CloudEventIdSpec extends AnyFunSuite {
       .collect()
     assert(got.toSeq == rows.map { case (t, m) => expected(t, m) })
   }
-
-  test("sha256 twin matches MessageDigest too") {
-    import spark.implicits._
-    val d = java.security.MessageDigest.getInstance("SHA-256")
-      .digest("tm".getBytes(UTF_8))
-    val got = Seq(("t", "m")).toDF("t", "m")
-      .select(CloudEventId.sha256Base64(col("t"), col("m"))).as[String]
-      .head()
-    assert(got == java.util.Base64.getEncoder.encodeToString(d))
-  }
 }

@@ -1,6 +1,10 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
+
 import graft.operators.{Dedup, Graph}
+import graft.telemetry.Telemetry
+import graft.telemetry.Telemetry.{LogBackend, LogEvent}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -103,5 +107,25 @@ class GraphSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L,
       10L -> 0L, 11L -> 1L))
+  }
+
+  test("graph_condense on an edgeless quotient puts every SCC at level 0 without a loop") {
+    // The testdata's transition graph is one SCC, so the quotient has
+    // no edges: there is nothing to relax.
+    val events = ArrayBuffer.empty[LogEvent]
+    val old = Telemetry.installed
+    Telemetry.install(Seq(new LogBackend {
+      val minLevel: Telemetry.Level = Telemetry.Debug
+      def emit(e: LogEvent): Unit = events.synchronized(events += e)
+    }))
+    val rows = try Graph.graphCondense(spark, dir).collect() finally Telemetry.install(old)
+    val sccIds = Graph.graphScc(spark, dir).select(col("scc_id")).distinct()
+      .collect().map(_.get(0)).toSet
+    assert(rows.map(_.getAs[Any]("scc_id")).toSet == sccIds)
+    assert(rows.forall(r => r.getAs[Long]("level") == 0L && r.getAs[Long]("out_degree") == 0L))
+    val loops = events.filter(e => e.message == "iterate" &&
+      e.metadata.get("op").contains("graph_condense"))
+    assert(loops.isEmpty, s"graph_condense entered its loop: ${loops.map(_.metadata)}")
+    Families.invalidateFixtures()
   }
 }

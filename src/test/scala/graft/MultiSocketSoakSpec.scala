@@ -7,7 +7,7 @@ import graft.sources.MultiSocketSource
 import graft.streaming.{KinesisLikeSink, OcsPipeline, RawPacket}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Soak of the PRODUCTION default path (VERDICT r13 task 9): Main's
+/** Soak of the PRODUCTION default path: Main's
   * default source is now `graft-multisocket` (the reference's Ranch
   * listener, application.ex:1-30), so this drives Main.start's exact
   * wiring — multi-connection TCP → watermark → stateful framing →

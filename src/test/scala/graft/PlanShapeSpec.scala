@@ -310,7 +310,7 @@ class PlanShapeSpec extends AnyFunSuite {
     """(ntile\(\d+\)|row_number\(\)|rank\(\)|percent_rank\(\)|cume_dist\(\)) windowspecdefinition\([^,()]*(ASC|DESC)""".r
 
   test("no registered query ranks the data through an unpartitioned window") {
-    // The r8 VERDICT's top defect class: ntile/row_number over an
+    // The top defect class: ntile/row_number over an
     // empty partition spec = ALL rows through one task. Ranking ops
     // must decompose via Ranks.groupedRank (bucket ledger); the only
     // unpartitioned windows allowed anywhere are non-ranking carries
@@ -364,7 +364,7 @@ class PlanShapeSpec extends AnyFunSuite {
       "q36_decile_lift" -> RelationalExt.q36DecileLift(spark, dir),
       "q34_percent_rank" -> RelationalExt.q34PercentRank(spark, dir),
       // round 12: the audit-side order statistic must ride the bucket
-      // ledger too, never a per-type full-sort window (r11 VERDICT).
+      // ledger too, never a per-type full-sort window.
       "sketch_quantile" -> ScaleOps.sketchQuantile(spark, dir))) {
       val p = plan(df)
       assert(!p.contains("ntile("), s"$name: ntile window survived the rewrite")

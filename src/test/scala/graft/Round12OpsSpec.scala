@@ -2207,7 +2207,7 @@ class Round12OpsSpec extends AnyFunSuite {
       out(3L) == ((2L, 2L)), "triangle nodes sit in the 2-core")
     assert(out(4L) == ((1L, 1L)), "pendant has coreness 1")
     // Fixpoint on the real pair graph: one more h-index round is a no-op.
-    val real = Graph.dupEdges(spark, dir)
+    val real = Dedup.pairEdges(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val c = Graph.coreness(real).select(col("node"),

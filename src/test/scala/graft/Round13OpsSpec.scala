@@ -980,7 +980,8 @@ class Round13OpsSpec extends AnyFunSuite {
     // THREE times (sym union + support join), so an uncheckpointed
     // 4-round chain re-plans 3⁴ copies of the LSH candidate machinery
     // — the graph_hits plan-doubling hazard, here in the spec itself.
-    val canon0 = Graph.trussCanon0(spark, dir).localCheckpoint(true)
+    val canon0 = Dedup.pairEdges(spark, dir).filter(col("src") < col("dst"))
+      .select(col("src").as("a"), col("dst").as("b")).localCheckpoint(true)
     Seq(1L, 2L).foreach { minSup =>
       var cur = canon0
       (1 to 3).foreach(_ => cur = Graph.peelOnce(cur, minSup).localCheckpoint(true))

@@ -34,7 +34,7 @@ class TokenCounterSpec extends AnyFunSuite {
       .agg(sum(col("chunk_tokens"))).collect()(0).getLong(0)
     val chars = TextAnalysis.bpeTokenCounts(spark, dir)
       .agg(sum(col("base_tokens"))).collect()(0).getLong(0)
-    // Structural bounds, not corpus luck (round-15 ADVICE: "bpe > ws"
+    // Structural bounds, not corpus luck ("bpe > ws"
     // held for the pinned corpus but could silently flip if the test
     // data or merge count changes): every merge strictly reduces the
     // character-token count, so chars > bpe; and the two counters must
@@ -71,7 +71,7 @@ class TokenCounterSpec extends AnyFunSuite {
       // Recompute the quota in exact integer arithmetic (BigInt) to
       // match the operator's own math: the operator guarantees alloc ∈
       // {⌊q⌋, ⌊q⌋+1}, and a Double-recomputed quota with tolerance
-      // exactly 1.0 could sit right on the boundary (round-15 ADVICE).
+      // exactly 1.0 could sit right on the boundary.
       val qFloor = (BigInt(tok) * 1000000 / totalTok).toLong
       assert(alloc == qFloor || alloc == qFloor + 1,
         s"$src: Hamilton allocation $alloc must be ⌊quota⌋ or ⌊quota⌋+1 " +
